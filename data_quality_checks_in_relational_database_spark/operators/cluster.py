@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_quality_checks_in_relational_database_spark.session import CheckpointScope
+
 
 def connected_components(
     pairs: DataFrame,
@@ -56,6 +58,10 @@ def connected_components(
     min-label loop runs unchanged; that path is the 100 TB contract,
     the union-find is the small-graph fast path.
     """
+    if probe_stride < 1 or probe_warmup < 0:
+        raise ValueError(
+            f"need probe_stride >= 1 and probe_warmup >= 0, got {probe_stride}, {probe_warmup}"
+        )
     from pyspark import StorageLevel
 
     # The pair list is referenced 4× below (forward + reversed edges,
@@ -127,20 +133,9 @@ def connected_components(
     # 2. Checkpoint blocks are NOT freed by unpersist()/clearCache();
     #    left alone they accumulate across calls and degrade the whole
     #    executor (observed: unrelated queries 2× slower after a few
-    #    calls). We snapshot sc.getPersistentRDDs() around the loop and
-    #    explicitly free every intermediate checkpoint, keeping only
-    #    the one backing the returned frame.
-    jsc = pairs.sparkSession.sparkContext._jsc
-
-    def _rdd_ids() -> set[int]:
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        it = jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in ids:
-                e.getValue().unpersist(False)
+    #    calls). A CheckpointScope around the loop frees every
+    #    intermediate checkpoint, keeping only the one backing the
+    #    returned frame.
 
     def _label_sum(df: DataFrame):
         # one-job materialize-and-probe: per-node min labels only ever
@@ -176,7 +171,7 @@ def connected_components(
     probe_rounds.add(max(max_iter - 1, 1))
     probe_rounds.add(max_iter)
 
-    pre = _rdd_ids()
+    scope = CheckpointScope(pairs.sparkSession)
     labels = (
         sym.groupBy("src")
         .agg(F.min("dst").alias("label"))
@@ -206,13 +201,13 @@ def connected_components(
     sym.unpersist()
     edges.unpersist()
     if not converged:
-        _free(_rdd_ids() - pre)
+        scope.free()
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    mid = _rdd_ids()
+    mark = scope.ids()
     result = labels.select(
         F.col("node"), F.col("label").alias("cluster_id")
     ).localCheckpoint()  # eager: detach from the intermediates, then free them
-    _free(mid - pre)
+    scope.free(mark)
     return result
 
 
@@ -324,19 +319,6 @@ def connected_components_star(
     """
     from pyspark import StorageLevel
 
-    spark = pairs.sparkSession
-    jsc = spark.sparkContext._jsc
-
-    def _rdd_ids() -> set[int]:
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        it = jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in ids:
-                e.getValue().unpersist(False)
-
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -368,7 +350,7 @@ def connected_components_star(
         ).collect()[0]
         return (row.n, row.h)
 
-    pre = _rdd_ids()
+    scope = CheckpointScope(pairs.sparkSession)
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -385,9 +367,9 @@ def connected_components_star(
             break
         prev = cur
     if not converged:
-        _free(_rdd_ids() - pre)
+        scope.free()
         raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
-    mid = _rdd_ids()
+    mark = scope.ids()
     # fixed point = star edges (node -> component min); the min itself
     # labels itself
     labels = (
@@ -399,7 +381,7 @@ def connected_components_star(
         .agg(F.min("cluster_id").alias("cluster_id"))
         .localCheckpoint()
     )
-    _free(mid - pre)
+    scope.free(mark)
     return labels
 
 

@@ -25,7 +25,7 @@ Scale design (the point of each variant):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -229,7 +229,6 @@ def ngram_jaccard_pairs(
             .select("doc_id_a", "doc_id_b", "jaccard")
         )
 
-    sets_ = sets_.persist(StorageLevel.MEMORY_AND_DISK)
     inv = sets_.select(F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle"))
     rare = (
         inv.groupBy("shingle")
@@ -244,17 +243,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
         .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
-    sh_a = sets_.select(F.col(id_col).alias("doc_id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sets_.select(F.col(id_col).alias("doc_id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sh_a, "doc_id_a")
-        .join(sh_b, "doc_id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
+    return _verify_jaccard(cand, sets_, sets_, threshold, id_col)
 
 
 def containment_pairs(
@@ -310,21 +299,29 @@ def containment_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+#: Signature width, LSH band count and shingle order of every MinHash
+#: path. Together they fix the ledger's band format (band hashes are not
+#: comparable across settings), so changing one means rebuilding every
+#: ledger written with the old values.
+NUM_PERM = 32
+BANDS = 8
+SHINGLE_N = 3
+assert NUM_PERM % BANDS == 0
+_ROWS = NUM_PERM // BANDS
 
-def minhash_signatures(
-    sets_: DataFrame, num_perm: int = 64, id_col: str = "doc_id"
-) -> DataFrame:
-    """num_perm-wide MinHash signature per document: (id, signature).
+
+def minhash_signatures(sets_: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """NUM_PERM-wide MinHash signature per document: (id, signature).
 
     Shaped for whole-stage codegen rather than nested higher-order
     functions (which evaluate interpreted and re-run captured
     expressions per element): explode the shingle sets, hash each
-    shingle ONCE (xxhash64, codegen'd), derive the num_perm
+    shingle ONCE (xxhash64, codegen'd), derive the NUM_PERM
     permutations with the Carter-Wegman affine family
     ``(h1 + i·h2) mod 2^32`` (h1/h2 = 32-bit halves, h2 forced odd),
-    and take num_perm map-side-combined MIN aggregates per document.
+    and take NUM_PERM map-side-combined MIN aggregates per document.
     Arithmetic stays ≪ 2^63 (ANSI-safe); the shuffle carries only
-    partial minima (num_perm longs per doc per partition).
+    partial minima (NUM_PERM longs per doc per partition).
     """
     mask32 = F.lit(0xFFFFFFFF)
     h = F.xxhash64("s")
@@ -335,22 +332,107 @@ def minhash_signatures(
     )
     mins = [
         F.min((F.col("h1") + i * F.col("h2")).bitwiseAND(mask32)).alias(f"m{i}")
-        for i in range(num_perm)
+        for i in range(NUM_PERM)
     ]
     agg = ex.groupBy(id_col).agg(*mins)
     return agg.select(
-        F.col(id_col), F.array(*[F.col(f"m{i}") for i in range(num_perm)]).alias("signature")
+        F.col(id_col), F.array(*[F.col(f"m{i}") for i in range(NUM_PERM)]).alias("signature")
     )
+
+
+def _band_rows(sig: DataFrame, id_col: str) -> DataFrame:
+    """Signatures → ``(sid, band, band_hash)`` rows, BANDS per document:
+    the band format every candidate join and the ledger's ``bands``
+    table share. Only these tiny rows go through the explode and the
+    bucket join; shingle arrays are re-joined just for the verified
+    candidate set."""
+    return sig.select(
+        F.col(id_col).alias("sid"),
+        F.posexplode(
+            # xxhash64 hashes the array<bigint> band slice directly
+            F.array(
+                *[
+                    F.xxhash64(F.slice(F.col("signature"), b * _ROWS + 1, _ROWS))
+                    for b in range(BANDS)
+                ]
+            )
+        ).alias("band", "band_hash"),
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+    id_col: str,
+    a: str = "doc_id_a",
+    b: str = "doc_id_b",
+) -> DataFrame:
+    """Join candidate pairs ``(a, b)`` back to two ``(id, shingles)``
+    frames and keep those with exact Jaccard ≥ threshold:
+    ``(a, b, jaccard)``. Candidates only — never all pairs."""
+    sh_a = sets_a.select(F.col(id_col).alias(a), F.col("shingles").alias("sh_a"))
+    sh_b = sets_b.select(F.col(id_col).alias(b), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        cand.join(sh_a, a)
+        .join(sh_b, b)
+        .withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _band_pairs(
+    sets_a: DataFrame,
+    bands_a: DataFrame,
+    sets_b: DataFrame,
+    bands_b: DataFrame,
+    threshold: float,
+    id_col: str,
+    a: str,
+    b: str,
+) -> DataFrame:
+    """Documents sharing a (band, band_hash) bucket, exact-verified.
+    The same band frame on both sides is a self-join and keeps a < b
+    only; distinct frames are disjoint document sets by contract."""
+    left, right = bands_a.alias("a"), bands_b.alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.band_hash") == F.col("b.band_hash"))
+    if bands_a is bands_b:
+        on = on & (F.col("a.sid") < F.col("b.sid"))
+    cand = (
+        left.join(right, on)
+        .select(F.col("a.sid").alias(a), F.col("b.sid").alias(b))
+        .dropDuplicates([a, b])
+    )
+    return _verify_jaccard(cand, sets_a, sets_b, threshold, id_col, a, b)
+
+
+def _read_ledger(spark: SparkSession, path: str, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """``(shingle sets, band rows)`` of a ledger written by
+    :func:`_write_ledger`, bands keyed ``sid`` like :func:`_band_rows`."""
+    bands = spark.read.parquet(f"{path}/bands").select(
+        F.col(id_col).alias("sid"), "band", "band_hash"
+    )
+    return spark.read.parquet(f"{path}/shingles"), bands
+
+
+def _write_ledger(sets_: DataFrame, bands: DataFrame, path: str, id_col: str) -> None:
+    """Write ``{path}/shingles`` (id, shingles) and ``{path}/bands``
+    (id, band, band_hash), the latter clustered on ``band_hash``."""
+    sets_.write.mode("overwrite").parquet(f"{path}/shingles")
+    bands.select(F.col("sid").alias(id_col), "band", "band_hash").repartition(
+        "band_hash"
+    ).write.mode("overwrite").parquet(f"{path}/bands")
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    num_perm: int = 32,
-    bands: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding, verified with exact
@@ -367,14 +449,15 @@ def minhash_lsh_pairs(
     :func:`band_bucket_audit` first to see the pair mass each cap
     removes. ``None`` (default) keeps full banding recall.
 
-    rows/band r = num_perm/bands; a pair with similarity s collides in
-    ≥1 band with p = 1-(1-s^r)^bands. The default (r=4, b=8) keeps
+    rows/band r = NUM_PERM/BANDS; a pair with similarity s collides in
+    ≥1 band with p = 1-(1-s^r)^BANDS. The constants (r=4, b=8) keep
     r=4's steep selectivity curve at 1/3 fewer permutations and band
     rows than r=4/b=12: recall at s=0.9 is 0.9995 and real near-dup
     pairs sit at s≥0.8 where per-pair recall is 0.985 — the in-repo
     recall pytest (pair set ≡ exact inverted-index baseline at every
     sf) is the guardrail that pins the observed recall at 1.0; widen
-    to b=12 if it ever goes red on new data. Random low-similarity
+    to b=12 (``BANDS = 12``, ``NUM_PERM = 48``, then rebuild every
+    ledger) if it ever goes red on new data. Random low-similarity
     pairs (s≈0.3, ubiquitous in shared-vocabulary corpora) collide
     with only 8·0.008 ≈ 6% band probability. r=3 is a trap on such
     corpora — s=0.4 pairs collide at 16·0.064 ≈ 64%, so the "cheaper
@@ -385,8 +468,6 @@ def minhash_lsh_pairs(
     Output: (doc_id_a, doc_id_b, jaccard) — same schema as the exact
     baseline so recall is directly testable.
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
     # the shingle-set table is consumed three times (signatures + both
     # sides of candidate verification); persist it instead of recomputing
     # the tokenize→shingle lineage per consumer. At warehouse scale the
@@ -394,11 +475,11 @@ def minhash_lsh_pairs(
     # per corpus snapshot (MEMORY_AND_DISK spills, never OOMs).
     from pyspark import StorageLevel
 
-    sets_ = shingle_sets(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
+    sets_ = shingle_sets(df, text_col, id_col, SHINGLE_N).persist(StorageLevel.MEMORY_AND_DISK)
     # the signature table feeds both sides of the band self-join;
-    # persisting it (64 longs/doc — smaller than the shingle sets)
+    # persisting it (NUM_PERM longs/doc — smaller than the shingle sets)
     # avoids recomputing the explode+aggregate per join branch
-    sig = minhash_signatures(sets_, num_perm, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    sig = minhash_signatures(sets_, id_col).persist(StorageLevel.MEMORY_AND_DISK)
     # ONE eager fill does both caches (r8): computing sig reads sets_
     # through its cold InMemoryRelation, which stores sets_'s partitions
     # as a byproduct — so by the time the band self-join and both
@@ -407,16 +488,7 @@ def minhash_lsh_pairs(
     # are warm. The former separate sets_.count() was a second full
     # pass + job for no additional safety.
     sig.count()
-    # band only (id, band, hash) — never move the shingle arrays through
-    # the 16× explode or the bucket join; they are re-joined just for
-    # the (tiny) verified candidate set
-    banded = sig.select(
-        F.col(id_col).alias("sid"),
-        F.posexplode(
-            # xxhash64 hashes the array<bigint> band slice directly
-            F.array(*[F.xxhash64(F.slice(F.col("signature"), b * r + 1, r)) for b in range(bands)])
-        ).alias("band", "band_hash"),
-    )
+    banded = _band_rows(sig, id_col)
     if max_bucket_size is not None:
         hot = (
             banded.groupBy("band", "band_hash")
@@ -425,39 +497,15 @@ def minhash_lsh_pairs(
             .select("band", "band_hash")
         )
         banded = banded.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.sid") < F.col("b.sid")),
-        )
-        .select(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    sh_a = sets_.select(F.col(id_col).alias("doc_id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sets_.select(F.col(id_col).alias("doc_id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sh_a, "doc_id_a")
-        .join(sh_b, "doc_id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
+    return _band_pairs(sets_, banded, sets_, banded, threshold, id_col, "doc_id_a", "doc_id_b")
 
 
 def minhash_lsh_pairs_against(
     new_df: DataFrame,
     corpus_df: DataFrame,
     threshold: float = 0.5,
-    num_perm: int = 32,
-    bands: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """Incremental near-dedup: MinHash-banded candidates of a NEW batch
     against an EXISTING corpus, verified with exact Jaccard — the
@@ -472,11 +520,9 @@ def minhash_lsh_pairs_against(
     triangle condition — the sets are disjoint by contract).
     Output: (new_id, corpus_id, jaccard).
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
     from pyspark import StorageLevel
 
-    def _banded(df: DataFrame, side: str):
+    def _sketch(df: DataFrame):
         # no eager fill here (r8), with the honest caveat (r9): the
         # verify join's shingle-side exchange does NOT depend on the
         # band-join candidates, so under AQE it and the signature stage
@@ -491,46 +537,21 @@ def minhash_lsh_pairs_against(
         # duplicated map-side pass runs in otherwise-idle slots, while
         # an eager fill serializes the query on a barrier. Revisit only
         # with a cluster-scale number.
-        sets_ = shingle_sets(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-        sig = minhash_signatures(sets_, num_perm, id_col)
-        banded = sig.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.posexplode(
-                F.array(
-                    *[F.xxhash64(F.slice(F.col("signature"), b * r + 1, r)) for b in range(bands)]
-                )
-            ).alias("band", "band_hash"),
-        )
-        return sets_, banded
+        sets_ = shingle_sets(df, text_col, id_col, SHINGLE_N).persist(StorageLevel.MEMORY_AND_DISK)
+        return sets_, _band_rows(minhash_signatures(sets_, id_col), id_col)
 
-    new_sets, new_banded = _banded(new_df, "new")
-    corp_sets, corp_banded = _banded(corpus_df, "corpus")
-    cand = (
-        new_banded.join(corp_banded, ["band", "band_hash"])
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    sh_n = new_sets.select(F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_a"))
-    sh_c = corp_sets.select(F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sh_n, "new_id")
-        .join(sh_c, "corpus_id")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    new_sets, new_bands = _sketch(new_df)
+    corp_sets, corp_bands = _sketch(corpus_df)
+    return _band_pairs(
+        new_sets, new_bands, corp_sets, corp_bands, threshold, id_col, "new_id", "corpus_id"
     )
 
 
 def write_minhash_ledger(
     df: DataFrame,
     path: str,
-    num_perm: int = 32,
-    bands: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
 ) -> None:
     """Materialize the corpus's dedup state as two parquet tables —
     ``{path}/shingles`` (id, shingles) and ``{path}/bands``
@@ -541,77 +562,37 @@ def write_minhash_ledger(
     The bands table is repartitioned on ``band_hash`` before writing;
     at warehouse scale, bucket it on the same key (``bucketBy``) so the
     per-batch candidate join co-locates without a corpus-side shuffle.
-    Append the new batch's own rows after each ingest to keep the
-    ledger current.
+    :func:`..streaming.dedup.apply_ingest_batch` advances a ledger by
+    one batch per committed version.
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    sets_ = shingle_sets(df, text_col, id_col, n)
-    sets_.write.mode("overwrite").parquet(f"{path}/shingles")
-    sig = minhash_signatures(sets_, num_perm, id_col)
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[F.xxhash64(F.slice(F.col("signature"), b * r + 1, r)) for b in range(bands)]
-            )
-        ).alias("band", "band_hash"),
-    )
-    banded.repartition("band_hash").write.mode("overwrite").parquet(f"{path}/bands")
+    sets_ = shingle_sets(df, text_col, id_col, SHINGLE_N)
+    _write_ledger(sets_, _band_rows(minhash_signatures(sets_, id_col), id_col), path, id_col)
 
 
 def minhash_pairs_against_ledger(
     new_df: DataFrame,
     ledger_path: str,
     threshold: float = 0.5,
-    num_perm: int = 48,
-    bands: int = 12,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs_against` with the corpus side read from
     a :func:`write_minhash_ledger` materialization — only the NEW batch
     is tokenized/sketched; the corpus contributes a parquet scan of its
     band table (filter/pushdown-friendly) plus a shingle lookup for the
-    verified candidates only. num_perm/bands/n must match the ledger's
-    build parameters (band hashes are not comparable across settings).
+    verified candidates only. The ledger must have been written with the
+    current NUM_PERM/BANDS/SHINGLE_N.
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
     from pyspark import StorageLevel
 
-    spark = new_df.sparkSession
-    new_sets = shingle_sets(new_df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
+    new_sets = shingle_sets(new_df, text_col, id_col, SHINGLE_N).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     new_sets.count()  # eager fill: see minhash_lsh_pairs
-    new_banded = minhash_signatures(new_sets, num_perm, id_col).select(
-        F.col(id_col).alias("new_id"),
-        F.posexplode(
-            F.array(
-                *[F.xxhash64(F.slice(F.col("signature"), b * r + 1, r)) for b in range(bands)]
-            )
-        ).alias("band", "band_hash"),
-    )
-    corp_banded = spark.read.parquet(f"{ledger_path}/bands").select(
-        F.col(id_col).alias("corpus_id"), "band", "band_hash"
-    )
-    cand = (
-        new_banded.join(corp_banded, ["band", "band_hash"])
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    sh_n = new_sets.select(F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_a"))
-    sh_c = spark.read.parquet(f"{ledger_path}/shingles").select(
-        F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sh_n, "new_id")
-        .join(sh_c, "corpus_id")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    new_bands = _band_rows(minhash_signatures(new_sets, id_col), id_col)
+    corp_sets, corp_bands = _read_ledger(new_df.sparkSession, ledger_path, id_col)
+    return _band_pairs(
+        new_sets, new_bands, corp_sets, corp_bands, threshold, id_col, "new_id", "corpus_id"
     )
 
 
@@ -886,16 +867,7 @@ def prefix_filter_jaccard_pairs(
         .select("doc_id_a", "doc_id_b")
         .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
-    sa = sets_.select(F.col(id_col).alias("doc_id_a"), F.col("shingles").alias("sh_a"))
-    sb = sets_.select(F.col(id_col).alias("doc_id_b"), F.col("shingles").alias("sh_b"))
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = shared / (F.size("sh_a") + F.size("sh_b") - shared)
-    return (
-        cands.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify_jaccard(cands, sets_, sets_, threshold, id_col)
 
 
 def golden_records(

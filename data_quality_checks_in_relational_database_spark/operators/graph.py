@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_quality_checks_in_relational_database_spark.session import CheckpointScope
+
 
 def _pagerank_driver(
     spark: SparkSession, norm_rows, iters: int, damping: float, prec: int
@@ -93,6 +95,8 @@ def pagerank(
     rounds even for a 10-node transition graph). Above the threshold
     the distributed loop below is the 100 TB web-graph contract.
     """
+    if probe_every < 1:
+        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     from pyspark import StorageLevel
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
@@ -141,20 +145,7 @@ def pagerank(
         )
     srcs = norm.select("src").distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
-    spark = edges.sparkSession
-    jsc = spark.sparkContext._jsc
-
-    def _rdd_ids() -> set[int]:
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        it = jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in ids:
-                e.getValue().unpersist(False)
-
-    pre = _rdd_ids()
+    scope = CheckpointScope(edges.sparkSession)
     base = (1.0 - damping) / n_nodes
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r")).localCheckpoint(
         eager=False
@@ -205,9 +196,9 @@ def pagerank(
             # ValueError, not assert: must hold under -O too
             if abs(total - 1.0) >= 1e-6:
                 raise ValueError(f"rank mass drifted: {total}")
-    mid = _rdd_ids()
+    mark = scope.ids()
     out = ranks.select("node", F.round(F.col("r"), prec).alias("rank")).localCheckpoint()
-    _free(mid - pre)
+    scope.free(mark)
     norm.unpersist()
     nodes.unpersist()
     srcs.unpersist()
@@ -278,6 +269,8 @@ def personalized_pagerank(
     truncating lineage per round. Seeds absent from the edge list
     still hold teleport mass (they are unioned into the node set).
     """
+    if probe_every < 1:
+        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     from pyspark import StorageLevel
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
@@ -342,19 +335,7 @@ def personalized_pagerank(
     nodes.count()
     srcs = norm.select("src").distinct().persist(StorageLevel.MEMORY_AND_DISK)
 
-    jsc = spark.sparkContext._jsc
-
-    def _rdd_ids() -> set[int]:
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        it = jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in ids:
-                e.getValue().unpersist(False)
-
-    pre = _rdd_ids()
+    scope = CheckpointScope(spark)
     ranks = nodes.select("node", F.col("tele").alias("r")).localCheckpoint(
         eager=False
     )
@@ -392,9 +373,9 @@ def personalized_pagerank(
             # ValueError, not assert: must hold under -O too
             if abs(total - 1.0) >= 1e-6:
                 raise ValueError(f"PPR mass drifted: {total}")
-    mid = _rdd_ids()
+    mark = scope.ids()
     out = ranks.select("node", F.round(F.col("r"), prec).alias("rank")).localCheckpoint()
-    _free(mid - pre)
+    scope.free(mark)
     norm.unpersist()
     nodes.unpersist()
     srcs.unpersist()
@@ -844,6 +825,8 @@ def hits_scores(
     collapsed by summing weights; fixed ``iters`` keeps both the job
     count and the oracle unroll bounded.
     """
+    if probe_every < 1:
+        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     from pyspark import StorageLevel
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
@@ -876,21 +859,8 @@ def hits_scores(
     )
     n_nodes = nodes.count()
 
-    # same checkpoint-block bookkeeping as pagerank: per-round
-    # localCheckpoints otherwise accumulate for the session's lifetime
-    jsc = spark.sparkContext._jsc
-
-    def _rdd_ids() -> set[int]:
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        it = jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in ids:
-                e.getValue().unpersist(False)
-
-    pre = _rdd_ids()
+    # per-round localCheckpoints otherwise outlive the call
+    scope = CheckpointScope(spark)
     hub = nodes.select("node", F.lit(1.0 / n_nodes).alias("s")).localCheckpoint(
         eager=False
     )
@@ -937,7 +907,7 @@ def hits_scores(
             s = hub.agg(F.sum("s")).collect()[0][0]
             if s != 0.0 and abs(s - 1.0) >= 1e-6:
                 raise ValueError(f"hub mass drifted: {s}")
-    mid = _rdd_ids()
+    mark = scope.ids()
     out = (
         hub.withColumnRenamed("s", "h")
         .join(auth.withColumnRenamed("s", "a"), "node")
@@ -948,7 +918,7 @@ def hits_scores(
         )
         .localCheckpoint()
     )
-    _free(mid - pre)
+    scope.free(mark)
     arcs.unpersist()
     nodes.unpersist()
     return out

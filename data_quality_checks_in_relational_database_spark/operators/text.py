@@ -845,6 +845,9 @@ def hashed_linear_score(
     """
     from data_quality_checks_in_relational_database_spark.functions.scalars import md5_u60
 
+    clash = {id_col, "n_tokens", "score", "keep"}.intersection(keep_cols or [])
+    if clash:
+        raise ValueError(f"keep_cols would duplicate output columns: {sorted(clash)}")
     toks = tokens(F.col(text_col))
 
     def w(t: Column) -> Column:

@@ -148,3 +148,34 @@ def register_views(
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
+
+
+class CheckpointScope:
+    """Lifetime of the checkpoint blocks an iterative loop creates.
+
+    ``localCheckpoint`` blocks are NOT freed by ``unpersist()`` /
+    ``clearCache()``; left alone, per-round checkpoints accumulate for
+    the session's lifetime and degrade the whole executor (observed:
+    unrelated queries 2× slower after a few calls). Construct the scope
+    before the loop (it snapshots the persistent RDDs), take
+    ``mark = scope.ids()`` just before the final eager checkpoint that
+    detaches the result, then ``scope.free(mark)`` frees every
+    intermediate while keeping the RDD backing the result.
+    ``scope.free()`` with no mark frees everything created since the
+    snapshot (the raise path).
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        self._jsc = spark.sparkContext._jsc
+        self._pre = self.ids()
+
+    def ids(self) -> set[int]:
+        return {int(i) for i in self._jsc.getPersistentRDDs().keySet().toArray()}
+
+    def free(self, mark: set[int] | None = None) -> None:
+        drop = (self.ids() if mark is None else mark) - self._pre
+        it = self._jsc.getPersistentRDDs().entrySet().iterator()
+        while it.hasNext():
+            e = it.next()
+            if int(e.getKey()) in drop:
+                e.getValue().unpersist(False)

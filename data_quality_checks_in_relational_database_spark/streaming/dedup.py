@@ -11,17 +11,21 @@ replays directly in tests, same as ``streaming/cdc.py``):
    epoch (the ``before=epoch`` bound makes at-least-once retries
    rebuild v<epoch> deterministically from v<epoch-1> + the batch —
    never from its own half-committed output);
-2. band-join the batch against that ledger + against itself, verify
-   candidates by exact Jaccard, and write the batch's duplicate pairs
-   under ``v<epoch>/pairs``;
-3. write the advanced ledger (previous shingles/bands ∪ the batch's)
-   under ``v<epoch>/shingles`` and ``v<epoch>/bands``, then commit the
-   version with a ``_COMMIT`` marker.
+2. shingle and band the batch ONCE (persisted, one eager fill), band-
+   join it against itself and against that ledger, verify candidates
+   by exact Jaccard, and write the batch's duplicate pairs under
+   ``v<epoch>/pairs``;
+3. write the advanced ledger — the batch's shingles/bands ∪ the
+   previous version's — once per table, straight into
+   ``v<epoch>/shingles`` and ``v<epoch>/bands`` (safe: v<epoch> is
+   never the version being read), then commit the version with a
+   ``_COMMIT`` marker.
 
-Cost per batch is O(batch + candidates): the corpus side contributes a
-parquet scan of its band table keyed on band_hash (bucket it on that
-key at warehouse scale) and a shingle lookup for verified candidates
-only — the corpus is never re-sketched.
+Cost per batch is O(batch + candidates) for the dedup itself: the
+corpus side contributes a parquet scan of its band table keyed on
+band_hash (bucket it on that key at warehouse scale) and a shingle
+lookup for verified candidates only — the corpus is never re-sketched.
+Rewriting the ledger copies the previous version once per table.
 """
 
 from __future__ import annotations
@@ -29,13 +33,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.operators import dedup as dd
-
-_PARAMS = dict(num_perm=32, bands=8, n=3)
-
-
 from data_quality_checks_in_relational_database_spark.streaming.epoch_state import (
     COMMIT_MARKER,
     commit_version,
@@ -65,50 +64,37 @@ def apply_ingest_batch(
     Emits this batch's duplicate pairs (vs the prior corpus AND within
     the batch itself) and advances the ledger, all under one committed
     version directory."""
+    from pyspark import StorageLevel
+
     spark = batch_df.sparkSession
     prev = _latest_version(ledger_root, before=int(epoch_id))
     vdir = _version_dir(ledger_root, epoch_id)
 
-    within = dd.minhash_lsh_pairs(
-        batch_df, threshold=threshold, text_col=text_col, id_col=id_col, **_PARAMS
-    ).select(
-        F.col("doc_id_a").alias("new_id"),
-        F.col("doc_id_b").alias("corpus_id"),
-        "jaccard",
+    sets_ = dd.shingle_sets(batch_df, text_col, id_col, dd.SHINGLE_N).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    if prev is not None:
-        cross = dd.minhash_pairs_against_ledger(
-            batch_df,
-            _version_dir(ledger_root, prev),
-            threshold=threshold,
-            text_col=text_col,
-            id_col=id_col,
-            **_PARAMS,
+    bands = dd._band_rows(dd.minhash_signatures(sets_, id_col), id_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        bands.count()  # one eager fill of both caches: see minhash_lsh_pairs
+        pairs = dd._band_pairs(
+            sets_, bands, sets_, bands, threshold, id_col, "new_id", "corpus_id"
         )
-        pairs = cross.unionByName(within)
-    else:
-        pairs = within
-    pairs.write.mode("overwrite").parquet(os.path.join(vdir, "pairs"))
-
-    # advance the ledger: previous tables ∪ this batch's
-    dd.write_minhash_ledger(
-        batch_df, vdir, text_col=text_col, id_col=id_col, **_PARAMS
-    )
-    if prev is not None:
-        pdir = _version_dir(ledger_root, prev)
-        for table in ("shingles", "bands"):
-            prev_tbl = spark.read.parquet(os.path.join(pdir, table))
-            cur = spark.read.parquet(os.path.join(vdir, table))
-            merged = cur.unionByName(prev_tbl)
-            # write-then-swap: overwrite-mode on the path being read
-            # would delete it under the lazy plan
-            tmp = os.path.join(vdir, f"_{table}_merged")
-            merged.write.mode("overwrite").parquet(tmp)
-            final = os.path.join(vdir, table)
-            spark.read.parquet(tmp).write.mode("overwrite").parquet(final)
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+        ledger_sets, ledger_bands = sets_, bands
+        if prev is not None:
+            prev_sets, prev_bands = dd._read_ledger(spark, _version_dir(ledger_root, prev), id_col)
+            cross = dd._band_pairs(
+                sets_, bands, prev_sets, prev_bands, threshold, id_col, "new_id", "corpus_id"
+            )
+            pairs = cross.unionByName(pairs)
+            ledger_sets = sets_.unionByName(prev_sets)
+            ledger_bands = bands.unionByName(prev_bands)
+        pairs.write.mode("overwrite").parquet(os.path.join(vdir, "pairs"))
+        dd._write_ledger(ledger_sets, ledger_bands, vdir, id_col)
+    finally:
+        sets_.unpersist()
+        bands.unpersist()
     # commit marker LAST: a crash before this line leaves an
     # uncommitted vdir that the next retry ignores and rewrites
     commit_version(vdir)

@@ -1,7 +1,9 @@
 """Round-9 optimization pins.
 
 Plan/semantics pins for the r9 changes: batched iterative-loop probes
-(same labels/ranks, fewer probe jobs), the one-scan split-cohort
+(same labels/ranks, fewer probe jobs, probe knobs validated at entry),
+``keep_cols`` pass-through that refuses duplicate output names, the
+one-scan split-cohort
 two-sample counts (row-identical to the two-filter + full-outer form,
 including NULL-predicate rows), and the operator-internal persist
 footprint (a bench-style sweep releases everything the pinned
@@ -12,6 +14,8 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+
+from data_quality_checks_in_relational_database_spark.operators import cluster, graph
 
 
 def _sweep(spark) -> None:
@@ -182,3 +186,40 @@ def test_nonconvergence_raise_contract_survives_stride(spark):
             chain, max_iter=3, driver_threshold=0, probe_warmup=2, probe_stride=4
         )
     _sweep(spark)
+
+
+@pytest.mark.parametrize(
+    "fn, kwargs",
+    [
+        (cluster.connected_components, {"probe_stride": 0}),
+        (cluster.connected_components, {"probe_warmup": -1}),
+        (graph.pagerank, {"probe_every": 0}),
+        (graph.personalized_pagerank, {"probe_every": 0}),
+        (graph.hits_scores, {"probe_every": 0}),
+    ],
+    ids=["cc_stride", "cc_warmup", "pagerank", "ppr", "hits"],
+)
+def test_probe_knobs_validated_at_entry(spark, fn, kwargs):
+    """A non-positive probe cadence must raise before any work: a zero
+    stride would loop forever building the probe schedule, a zero
+    probe_every would divide by zero mid-loop."""
+    edges = spark.createDataFrame([(1, 0)], schema="src long, dst long")
+    seeds = (edges,) if fn is graph.personalized_pagerank else ()
+    with pytest.raises(ValueError, match="probe"):
+        fn(edges, *seeds, driver_threshold=0, **kwargs)
+
+
+@pytest.mark.parametrize("bad", ["doc_id", "n_tokens", "score", "keep"])
+def test_hashed_linear_score_rejects_clashing_keep_cols(spark, bad):
+    from data_quality_checks_in_relational_database_spark.operators.text import (
+        hashed_linear_score,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b", "en", 0.5)], schema="doc_id long, text string, lang string, score double"
+    )
+    with pytest.raises(ValueError, match=bad):
+        hashed_linear_score(docs, keep_cols=["lang", bad])
+    assert hashed_linear_score(docs, keep_cols=["lang"]).columns == [
+        "doc_id", "lang", "n_tokens", "score", "keep",
+    ]

@@ -898,6 +898,7 @@ def test_streaming_ingest_dedup_retry_idempotent(spark, tmp_path):
     """Re-applying the SAME epoch (foreachBatch at-least-once retry)
     must leave pairs and ledger state identical — the strictly-older
     version bound rebuilds v1 from v0, never from half-committed v1."""
+    from data_quality_checks_in_relational_database_spark.operators import dedup as dd
     from data_quality_checks_in_relational_database_spark.streaming.dedup import (
         apply_ingest_batch,
         read_pairs,
@@ -907,19 +908,33 @@ def test_streaming_ingest_dedup_retry_idempotent(spark, tmp_path):
     root = str(tmp_path / "ledger")
     apply_ingest_batch(batches[0], 0, root)
     apply_ingest_batch(batches[1], 1, root)
+    v1 = tmp_path / "ledger" / "v1"
+
+    def ledger():
+        bands = sorted(
+            (r["doc_id"], r["band"], r["band_hash"])
+            for r in spark.read.parquet(str(v1 / "bands")).collect()
+        )
+        shingles = sorted(
+            (r["doc_id"], tuple(r["shingles"]))
+            for r in spark.read.parquet(str(v1 / "shingles")).collect()
+        )
+        return bands, shingles
+
     before_pairs = _pair_set(read_pairs(spark, root).collect(), "new_id", "corpus_id")
-    before_ledger = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "ledger" / "v1" / "shingles")).collect()
-    )
+    before_bands, before_shingles = ledger()
     apply_ingest_batch(batches[1], 1, root)  # retry
     after_pairs = _pair_set(read_pairs(spark, root).collect(), "new_id", "corpus_id")
-    after_ledger = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "ledger" / "v1" / "shingles")).collect()
-    )
+    after_bands, after_shingles = ledger()
     assert after_pairs == before_pairs
-    assert after_ledger == before_ledger
+    assert after_bands == before_bands
+    assert after_shingles == before_shingles
+    # v1 holds both batches exactly once: one row per band per sketched doc
+    ids = [d for d, _ in after_shingles]
+    fed = batches[0].unionByName(batches[1]).select("doc_id").collect()
+    assert sorted(ids) == sorted(r["doc_id"] for r in fed)
+    sketched = {d for d, _, _ in after_bands}
+    assert len(set(after_bands)) == len(after_bands) == dd.BANDS * len(sketched)
 
 
 def test_streaming_ingest_dedup_live_stream(spark, tmp_path):
