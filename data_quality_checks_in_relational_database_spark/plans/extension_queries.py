@@ -282,9 +282,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs)
 
 
+# The closure oracles below materialize their pair and edge CTEs: inlined,
+# DuckDB re-evaluates the all-pairs Jaccard inside every iteration of the
+# recursive reach join (cluster_safe_split: 166 s → 8 s single-threaded at
+# sf0.001, identical rows).
 ORACLE_DEDUP_CLUSTERS = f"""
-WITH RECURSIVE pairs AS ({ORACLE_NGRAM_JACCARD}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({ORACLE_NGRAM_JACCARD}),
+edges AS MATERIALIZED (
     SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
     UNION ALL
     SELECT doc_id_b, doc_id_a FROM pairs
@@ -330,8 +334,8 @@ def q_dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_CLUSTER_HISTOGRAM = f"""
-WITH RECURSIVE pairs AS ({ORACLE_NGRAM_JACCARD}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({ORACLE_NGRAM_JACCARD}),
+edges AS MATERIALIZED (
     SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
     UNION ALL
     SELECT doc_id_b, doc_id_a FROM pairs
@@ -1934,8 +1938,8 @@ def q_quality_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_QUALITY_KEEPERS = f"""
-WITH RECURSIVE pairs AS ({ORACLE_NGRAM_JACCARD}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({ORACLE_NGRAM_JACCARD}),
+edges AS MATERIALIZED (
     SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
     UNION ALL
     SELECT doc_id_b, doc_id_a FROM pairs
@@ -2801,8 +2805,8 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_ENTITY_RESOLUTION = f"""
-WITH RECURSIVE pairs AS ({ORACLE_FUZZY_PARTS}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({ORACLE_FUZZY_PARTS}),
+edges AS MATERIALIZED (
     SELECT id_a AS src, id_b AS dst FROM pairs
     UNION ALL
     SELECT id_b, id_a FROM pairs
@@ -3892,8 +3896,8 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_CLUSTER_SAFE_SPLIT = f"""
-WITH RECURSIVE pairs AS ({ORACLE_NGRAM_JACCARD}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({ORACLE_NGRAM_JACCARD}),
+edges AS MATERIALIZED (
     SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
     UNION ALL
     SELECT doc_id_b, doc_id_a FROM pairs
@@ -5065,8 +5069,8 @@ def q_media_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_MEDIA_DHASH_CLUSTERS = f"""
-WITH RECURSIVE dpairs AS ({ORACLE_MEDIA_DHASH_PAIRS}),
-edges AS (
+WITH RECURSIVE dpairs AS MATERIALIZED ({ORACLE_MEDIA_DHASH_PAIRS}),
+edges AS MATERIALIZED (
     SELECT doc_id_a AS src, doc_id_b AS dst FROM dpairs
     UNION ALL
     SELECT doc_id_b, doc_id_a FROM dpairs

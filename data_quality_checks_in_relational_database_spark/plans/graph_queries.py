@@ -172,7 +172,7 @@ pairs AS (
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
     ) WHERE jaccard >= 0.5
 ),
-sym AS (
+sym AS MATERIALIZED (
     SELECT doc_id_a AS s, doc_id_b AS t FROM pairs
     UNION ALL
     SELECT doc_id_b, doc_id_a FROM pairs

@@ -96,19 +96,25 @@ def test_cosine_topk_hof_broadcasts_queries(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-@pytest.mark.parametrize(
-    "name", [n for n, s in REGISTRY.items() if s.oracle is not None]
-)
-def test_no_rowwise_python_in_oracle_queries(spark, name):
-    """Every SQL-expressible query must compile to a pure JVM plan
-    (media_features legitimately uses ArrowEvalPython/mapInPandas)."""
-    if name == "media_features":
-        pytest.skip("mapInPandas is the designed Arrow batch path")
-    df = REGISTRY[name].fn(spark, SF_SMOKE)
-    plan = _formatted(df)
-    assert "BatchEvalPython" not in plan
+@pytest.fixture(scope="module")
+def built():
+    """Registered queries built once for the whole-registry plan sweeps
+    (.rdd, rowwise Python, cartesian, unpartitioned window). Building a
+    query runs its eager fills (counts, driver-side thresholds); the
+    sweeps only read its plans, which the DataFrame keeps, so one build
+    per query serves all four."""
+    cache = {}
+    yield cache
+    cache.clear()
 
-def test_no_rdd_conversion_during_query_construction(spark, monkeypatch):
+
+def _built(built, spark, name):
+    if name not in built:
+        built[name] = REGISTRY[name].fn(spark, SF_SMOKE)
+    return built[name]
+
+
+def test_no_rdd_conversion_during_query_construction(spark, monkeypatch, built):
     """`df.rdd` forces plan analysis and builds a Python RDD lineage —
     driver overhead per operator call on a real cluster. No registered
     query may touch it while CONSTRUCTING its plan (bounded collect()s
@@ -120,7 +126,22 @@ def test_no_rdd_conversion_during_query_construction(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "rdd", property(_boom))
     for name, spec in REGISTRY.items():
-        spec.fn(spark, SF_SMOKE)  # plan construction only; no action
+        # always a fresh build under the patch (plan construction only;
+        # no action); the sweeps below reuse it
+        built[name] = spec.fn(spark, SF_SMOKE)
+
+
+@pytest.mark.parametrize(
+    "name", [n for n, s in REGISTRY.items() if s.oracle is not None]
+)
+def test_no_rowwise_python_in_oracle_queries(spark, built, name):
+    """Every SQL-expressible query must compile to a pure JVM plan
+    (media_features legitimately uses ArrowEvalPython/mapInPandas)."""
+    if name == "media_features":
+        pytest.skip("mapInPandas is the designed Arrow batch path")
+    df = _built(built, spark, name)
+    plan = _formatted(df)
+    assert "BatchEvalPython" not in plan
 
 
 #: Queries where a BroadcastNestedLoopJoin is the DESIGNED plan: either
@@ -271,8 +292,8 @@ BNLJ_ALLOWED = {
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_accidental_cartesian(spark, name):
-    df = REGISTRY[name].fn(spark, SF_SMOKE)
+def test_no_accidental_cartesian(spark, built, name):
+    df = _built(built, spark, name)
     plan = _formatted(df)
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
     if name not in BNLJ_ALLOWED:
@@ -510,8 +531,8 @@ _UNPART_WINDOW = re.compile(r"windowspecdefinition\([^,)]*? (ASC|DESC)")
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_unpartitioned_window_over_data(spark, name):
-    df = REGISTRY[name].fn(spark, SF_SMOKE)
+def test_no_unpartitioned_window_over_data(spark, built, name):
+    df = _built(built, spark, name)
     plan = df._jdf.queryExecution().executedPlan().toString()
     hits = _UNPART_WINDOW.findall(plan)
     if name in GLOBAL_WINDOW_ALLOWED:
