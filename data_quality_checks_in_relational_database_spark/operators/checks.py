@@ -41,11 +41,10 @@ def _col(c: Column | str) -> Column:
 def volume_audit(
     tables: dict[str, DataFrame],
     group_by: list[str] | None = None,
-    constants: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Per-table (optionally per-group) record counts as one long frame.
 
-    Output: ``[*constants, *group_by, table_name, record_count]``.
+    Output: ``[*group_by, table_name, record_count]``.
     One aggregate per table unioned into a single lazy DAG — Spark runs
     all scans in parallel (replaces the reference's serial per-schema
     loop + UNION ALL query, ``pre_and_post_etl_checks.py:45-110``).
@@ -53,14 +52,12 @@ def volume_audit(
     used directly, alias preserved.
     """
     group_by = group_by or []
-    constants = constants or {}
     parts = []
     for name, df in tables.items():
         agg = df.groupBy(*group_by).agg(F.count(F.lit(1)).alias("record_count")) if group_by else df.agg(
             F.count(F.lit(1)).alias("record_count")
         )
-        proj = [F.lit(v).alias(k) if not isinstance(v, Column) else v.alias(k) for k, v in constants.items()]
-        parts.append(agg.select(*proj, *group_by, F.lit(name).alias("table_name"), "record_count"))
+        parts.append(agg.select(*group_by, F.lit(name).alias("table_name"), "record_count"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -83,7 +80,6 @@ class FreshnessSpec:
 
 def freshness_audit(
     specs: list[FreshnessSpec],
-    constants: dict[str, Column] | None = None,
     with_quarter: bool = True,
 ) -> DataFrame:
     """Per-table record count + max event date, one row per spec.
@@ -95,7 +91,6 @@ def freshness_audit(
     as ``reporting_quarter`` (0 in Q1, verbatim quirk preserved).
     Column pruning reduces each scan to the single timestamp column.
     """
-    constants = constants or {}
     parts = []
     for s in specs:
         aggs = [
@@ -103,8 +98,7 @@ def freshness_audit(
             F.max(F.to_date(_col(s.ts_col))).alias("max_date"),
         ]
         agg = s.df.filter(_col(s.ts_col) < F.current_timestamp()).agg(*aggs)
-        proj = [v.alias(k) for k, v in constants.items()]
-        cols = [*proj, F.lit(s.table_name).alias("table_name"), "record_count", "max_date"]
+        cols = [F.lit(s.table_name).alias("table_name"), "record_count", "max_date"]
         if with_quarter:
             cols.append((F.quarter(F.current_timestamp()) - 1).alias("reporting_quarter"))
         parts.append(agg.select(*cols))

@@ -23,7 +23,7 @@ without touching raw data again. No counterpart in the reference
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["cms_hash", "cms_counters", "cms_topk"]
@@ -114,10 +114,10 @@ def cms_topk(
             for r in range(depth)
         ]
     )
-    # pinned: three consumers below (counter re-sum, probe side of the
-    # estimate join, the N aggregate); the frame is depth·|keys| narrow
-    # rows. No eager fill — the first-touch race is perf-only and
-    # eager fills measured wash-or-loss on the sibling shapes (r9).
+    # pinned: two consumers below (counter re-sum, probe side of the
+    # estimate join); the frame is depth·|keys| narrow rows. No eager
+    # fill — the first-touch race is perf-only and eager fills measured
+    # wash-or-loss on the sibling shapes (r9).
     keys = (
         df.filter(F.col(key_col).isNotNull())
         .groupBy(F.col(key_col).cast("string").alias("key"))
@@ -126,29 +126,26 @@ def cms_topk(
         .select("key", "exact_count", F.col("p.row").alias("row"), F.col("p.bucket").alias("bucket"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counters = keys.groupBy("row", "bucket").agg(
-        F.sum("exact_count").alias("cnt")
+    # the ε bound's N rides the bounded counters table: each key
+    # carries exact_count on all ``depth`` probe rows, so every probe
+    # row's counters sum to N exactly; the double arithmetic matches the
+    # old driver-side int(math.ceil(math.e / width * N)) op for op (same
+    # literal e/width, one multiply, one ceil)
+    counters = (
+        keys.groupBy("row", "bucket")
+        .agg(F.sum("exact_count").alias("cnt"))
+        .withColumn("n_sketched", F.sum("cnt").over(Window.partitionBy("row")).cast("double"))
     )
     # counters table is bounded (depth·width rows) -> broadcast join
     est = (
         keys.join(F.broadcast(counters), ["row", "bucket"])
         .groupBy("key", "exact_count")
-        .agg(F.min("cnt").alias("est_count"))
-    )
-    # the ε bound as a 1-row broadcast instead of a driver collect:
-    # each key carries exact_count on all ``depth`` probe rows, so
-    # summing row 0 gives N exactly; the double arithmetic matches the
-    # old driver-side int(math.ceil(math.e / width * N)) op for op
-    # (same literal e/width, one multiply, one ceil)
-    nrow = (
-        keys.filter(F.col("row") == 0)
-        .agg(F.sum("exact_count").cast("double").alias("n_sketched"))
+        .agg(F.min("cnt").alias("est_count"), F.max("n_sketched").alias("n_sketched"))
     )
     bound = F.ceil(F.lit(math.e / width) * F.col("n_sketched"))
     return (
         est.orderBy(F.col("est_count").desc(), F.col("key").asc())
         .limit(k)
-        .crossJoin(F.broadcast(nrow))
         .select(
             "key",
             F.col("est_count").cast("long").alias("est_count"),

@@ -28,7 +28,7 @@ from data_quality_checks_in_relational_database_spark.operators.checks import (
     reconcile,
     volume_audit,
 )
-from data_quality_checks_in_relational_database_spark.operators.fanout import run_fanout
+from data_quality_checks_in_relational_database_spark.operators.fanout import SOURCE_COL, run_fanout
 from data_quality_checks_in_relational_database_spark.session import load_tables
 from data_quality_checks_in_relational_database_spark.sources.catalog import SlicedFleetCatalog
 
@@ -240,7 +240,8 @@ _FANOUT_MISSING = {("nation_3", "orders")}  # deterministic skip-path exercise
 def q_fanout_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fleet = 5 per-nation slices of shared customer/orders tables;
     source ``nation_3`` is marked missing its ``orders`` table and must
-    be skipped (reference error-1146 path). One lazy union DAG."""
+    be skipped (reference error-1146 path). One stacked plan, counted by
+    source; a surviving nation with no rows still reports 0."""
     t = load_tables(spark, sf_dir, ("customer", "orders"))
     cust = t["customer"]
     ords = t["orders"].join(
@@ -250,12 +251,21 @@ def q_fanout_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices = {f"nation_{k}": (F.col("c_nationkey") == k) for k in _FANOUT_NATIONS}
     catalog = SlicedFleetCatalog(tables, slices, missing=_FANOUT_MISSING)
 
-    def check(src: str, tabs: dict[str, DataFrame]) -> DataFrame:
-        return volume_audit(tabs, constants={"source": F.lit(src)})
+    def check(tabs: dict[str, DataFrame]) -> DataFrame:
+        return volume_audit(tabs, group_by=[SOURCE_COL])
 
     result = run_fanout(catalog, check, required_tables=["customer", "orders"])
     assert result.skipped == [("nation_3", "orders")]
-    return result.report
+    live = [s for s in catalog.list_sources() if s not in {src for src, _ in result.skipped}]
+    grid = spark.range(1).select(
+        F.explode(F.array(*map(F.lit, live))).alias(SOURCE_COL),
+        F.explode(F.array(*map(F.lit, tables))).alias("table_name"),
+    )
+    return grid.join(result.report, [SOURCE_COL, "table_name"], "left").select(
+        F.col(SOURCE_COL).alias("source"),
+        "table_name",
+        F.coalesce("record_count", F.lit(0)).alias("record_count"),
+    )
 
 
 ORACLE_FANOUT_VOLUME = """

@@ -5,9 +5,10 @@ The reference operates on a *fleet* of homogeneous MySQL schemas
 and a name-prefix filter (``data_consistency_checks.py:39-41``), then
 loops over them serially. Here a catalog abstraction provides
 enumeration + existence checks + reads; the fan-out runner
-(``operators.fanout``) composes per-source plans into ONE lazy union
-DAG, so Spark schedules every source's scan in parallel instead of a
-driver loop (SURVEY.md §3 "Spark lifecycle").
+(``operators.fanout``) stacks every source's copy of a table into ONE
+source-tagged frame and runs the check once over the stack, so Spark
+plans one scan per table for the whole fleet instead of a driver loop
+over per-source plans (SURVEY.md §3 "Spark lifecycle").
 
 Two implementations:
 
@@ -19,6 +20,8 @@ Two implementations:
 - :class:`ParquetDirCatalog` — each "database" is a directory of
   ``<table>.parquet``; used by the test harness over the driver's
   testdata, and representative of a partition-per-source data lake.
+  A table's schema is inferred once per catalog, with one merged
+  footer scan over every source's file, so reads start no Spark job.
 """
 
 from __future__ import annotations
@@ -26,8 +29,10 @@ from __future__ import annotations
 import os
 from abc import ABC, abstractmethod
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class FleetCatalog(ABC):
@@ -107,6 +112,9 @@ class ParquetDirCatalog(FleetCatalog):
         """``root_to_sources`` maps source name → directory path."""
         self.spark = spark
         self.sources = dict(root_to_sources)
+        # table → merged schema of every source's file, or None when the
+        # sources' types conflict and each read infers its own
+        self._schemas: dict[str, StructType | None] = {}
 
     def list_sources(self, prefix: str = "") -> list[str]:
         return sorted(s for s in self.sources if s.startswith(prefix))
@@ -117,5 +125,26 @@ class ParquetDirCatalog(FleetCatalog):
     def table_exists(self, source: str, table: str) -> bool:
         return source in self.sources and os.path.exists(self._path(source, table))
 
+    def _schema(self, table: str) -> StructType | None:
+        """One ``mergeSchema`` footer scan over every source's file for
+        ``table`` (one Spark job per table, whatever the fleet size).
+        Columns a source lacks read as NULL there. Types that cannot
+        merge (e.g. int32 in one source, int64 in another) fall back to
+        per-source inference; the fan-out's union then widens them."""
+        if table not in self._schemas:
+            paths = [self._path(s, table) for s in self.sources if self.table_exists(s, table)]
+            try:
+                merged = self.spark.read.option("mergeSchema", "true").parquet(*paths).schema
+            except Py4JJavaError as e:  # the JVM's SparkException
+                if "CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE" not in str(e):
+                    raise
+                merged = None
+            self._schemas[table] = merged
+        return self._schemas[table]
+
     def read(self, source: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(source, table))
+        path = self._path(source, table)
+        schema = self._schema(table) if os.path.exists(path) else None
+        if schema is None:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)

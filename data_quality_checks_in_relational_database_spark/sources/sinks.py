@@ -49,8 +49,7 @@ def write_report(
     actually landed.
     """
     df.write.mode(mode).format(fmt).save(path)
-    spark: SparkSession = df.sparkSession
-    observed = spark.read.format(fmt).load(path).count()
+    observed = _recount(df, path, fmt)
     return WriteAudit(target=path, mode=mode, rows_written=observed, expected_rows=expected_count)
 
 
@@ -76,9 +75,15 @@ def write_partitioned(
     the idempotent per-slice refresh a scheduled DQ job needs.
     """
     df.write.mode(mode).format(fmt).partitionBy(*partition_by).save(path)
-    spark: SparkSession = df.sparkSession
-    observed = spark.read.format(fmt).load(path).count()
+    observed = _recount(df, path, fmt)
     return WriteAudit(target=path, mode=mode, rows_written=observed, expected_rows=expected_count)
+
+
+def _recount(df: DataFrame, path: str, fmt: str) -> int:
+    """Rows now at ``path``: a fresh scan of the written files, read with
+    the written frame's schema so the scan starts no schema-inference
+    job of its own."""
+    return df.sparkSession.read.schema(df.schema).format(fmt).load(path).count()
 
 
 def write_table(

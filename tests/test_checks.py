@@ -7,10 +7,11 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.operators.checks import reconcile
-from data_quality_checks_in_relational_database_spark.operators.fanout import run_fanout
+from data_quality_checks_in_relational_database_spark.operators.fanout import SOURCE_COL, run_fanout
 from data_quality_checks_in_relational_database_spark.sources.catalog import SlicedFleetCatalog
 from data_quality_checks_in_relational_database_spark.sources.sinks import write_report
 
@@ -43,25 +44,42 @@ def test_reconcile_null_variance(spark):
 def test_fanout_skips_missing_and_widens_schema(spark):
     t1 = spark.createDataFrame([(1, "x")], ["site", "a"])
     tables = {"t1": t1}
-    cat = SlicedFleetCatalog(
+
+    class WideningCatalog(SlicedFleetCatalog):
+        def read(self, source, table):
+            df = super().read(source, table)
+            if source == "s3":  # extra column → pandas-style widening on union
+                df = df.withColumn("extra", F.lit(1))
+            return df
+
+    cat = WideningCatalog(
         tables,
         slices={"s1": F.lit(True), "s2": F.lit(True), "s3": F.lit(True)},
         missing={("s2", "t1")},
     )
     calls = []
 
-    def check(src, tabs):
-        calls.append(src)
-        df = tabs["t1"].select(F.lit(src).alias("source"), F.count(F.lit(1)).alias("n"))
-        if src == "s3":  # extra column → pandas-style widening on union
-            df = df.withColumn("extra", F.lit(1))
-        return df
+    def check(tabs):
+        calls.append(sorted(tabs))
+        widened = {r[SOURCE_COL]: r["extra"] for r in tabs["t1"].collect()}
+        assert widened == {"s1": None, "s3": 1}  # widened with NULLs
+        return tabs["t1"].groupBy(F.col(SOURCE_COL).alias("source")).agg(
+            F.count(F.lit(1)).alias("n"), F.max("extra").alias("extra")
+        )
 
     result = run_fanout(cat, check, required_tables=["t1"])
+    assert calls == [["t1"]]  # one check over the stacked fleet
     assert result.attempted == 3 and result.succeeded == 2
     assert result.skipped == [("s2", "t1")]
     rows = {r["source"]: (r["n"], r["extra"]) for r in result.report.collect()}
-    assert rows == {"s1": (1, None), "s3": (1, 1)}  # widened with NULLs
+    assert rows == {"s1": (1, None), "s3": (1, 1)}
+
+
+def test_fanout_rejects_reserved_source_column(spark):
+    t1 = spark.createDataFrame([(1, "x")], ["site", SOURCE_COL])
+    cat = SlicedFleetCatalog({"t1": t1}, slices={"s1": F.lit(True)})
+    with pytest.raises(ValueError, match=SOURCE_COL):
+        run_fanout(cat, lambda tabs: tabs["t1"], required_tables=["t1"])
 
 
 def test_write_report_audit(spark):

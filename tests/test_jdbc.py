@@ -195,6 +195,7 @@ def test_derby_fanout_over_live_fleet(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_quality_checks_in_relational_database_spark.operators.fanout import (
+        SOURCE_COL,
         run_fanout,
     )
 
@@ -204,11 +205,9 @@ def test_derby_fanout_over_live_fleet(spark, tmp_path):
     _seed_derby(spark, cfg, "OPENMRS_Y", "ENCOUNTER", [(4, "a")])
     cat = JdbcFleetCatalog(spark, cfg)
 
-    def check(src, tables):
-        return (
-            tables["OBS"]
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select(F.lit(src).alias("source"), "n_rows")
+    def check(tables):
+        return tables["OBS"].groupBy(F.col(SOURCE_COL).alias("source")).agg(
+            F.count(F.lit(1)).alias("n_rows")
         )
 
     rep = run_fanout(cat, check, ["OBS", "ENCOUNTER"], prefix="OPENMRS_")

@@ -13,6 +13,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_checks_in_relational_database_spark.operators.fanout import SOURCE_COL
 from data_quality_checks_in_relational_database_spark.plans.openmrs_pipelines import (
     etl_reconciliation_check,
     loading_status_check,
@@ -220,13 +221,149 @@ def test_facility_config_deterministic_on_multirow_config(spark):
     gp = spark.createDataFrame(
         [("current_health_center_id", "7"), ("current_health_center_id", "3")],
         ["property", "property_value"],
-    )
+    ).withColumn(SOURCE_COL, F.lit("openmrs_x"))
     loc = spark.createDataFrame(
         [(3, "Gamma Clinic"), (7, "Delta Clinic")], ["location_id", "name"]
-    )
+    ).withColumn(SOURCE_COL, F.lit("openmrs_x"))
     for _ in range(3):  # repeated runs — any ordering instability flakes here
         row = facility_config(gp.repartition(5), loc).collect()
         assert len(row) == 1
         assert row[0]["facility_id_str"] == "3"
         assert row[0]["site_id"] == 3
         assert row[0]["facility_name"] == "Gamma Clinic"
+
+
+# --- the fixture's fleet plus one more facility ---------------------------
+
+
+def _facility(spark, gp_rows, loc_rows, obs_dates, voided_type="bigint"):
+    """All eight tables of one facility. ``obs_dates`` carry voided
+    flags; encounter/orders have one row each, person 3 rows (1 voided),
+    patient 2, patient_state 2 (1 voided)."""
+
+    def evts(id_col, ts_col, rows):
+        return spark.createDataFrame(
+            [(i, TS.fromisoformat(d), v) for i, (d, v) in enumerate(rows)],
+            f"{id_col} bigint, {ts_col} timestamp, voided {voided_type}",
+        )
+
+    def persons(id_col, voided):
+        return spark.createDataFrame(
+            [(i, v) for i, v in enumerate(voided)], f"{id_col} bigint, voided {voided_type}"
+        )
+
+    return {
+        "global_property": spark.createDataFrame(gp_rows, "property string, property_value string"),
+        "location": spark.createDataFrame(loc_rows, "location_id bigint, name string"),
+        "obs": evts("obs_id", "obs_datetime", obs_dates),
+        "encounter": evts("encounter_id", "encounter_datetime", [("2024-05-02", 0)]),
+        "orders": evts("order_id", "start_date", [("2024-05-04", 0)]),
+        "person": persons("person_id", [0, 1, 0]),
+        "patient": persons("patient_id", [0, 0]),
+        "patient_state": persons("patient_state_id", [0, 1]),
+    }
+
+
+def _with_facility(spark, catalog, root, name, tables):
+    d = root / name
+    d.mkdir()
+    for t, df in tables.items():
+        _write(df, str(d / f"{t}.parquet"))
+    return ParquetDirCatalog(spark, {**catalog.sources, name: str(d)})
+
+
+def _dc_rows(catalog):
+    fan = loading_status_check(catalog)
+    return fan, {(r["facility_id"], r["table_name"]): r for r in fan.report.collect()}
+
+
+def _gp(value):
+    return [("current_health_center_id", value), ("other", "9")]
+
+
+def test_loading_status_future_only_table_reports_zero(spark, fleet, tmp_path):
+    """A source whose obs rows are all dated after now keeps its obs row:
+    record_count 0 and a NULL max_date (a global aggregate over no rows)."""
+    catalog, _ = fleet
+    tables = _facility(
+        spark, _gp("4"), [(4, "Delta Clinic")], [("2030-01-01", 0), ("2031-06-01", 0)]
+    )
+    fan, rows = _dc_rows(_with_facility(spark, catalog, tmp_path, "openmrs_fac4", tables))
+    assert (fan.attempted, fan.succeeded) == (4, 3)
+    assert len(rows) == 9
+    assert rows[("4", "obs")]["record_count"] == 0
+    assert rows[("4", "obs")]["max_date"] is None
+    assert rows[("4", "obs")]["facility_name"] == "Delta Clinic"
+    assert rows[("4", "encounter")]["record_count"] == 1
+    assert rows[("4", "encounter")]["max_date"] == datetime.date(2024, 5, 2)
+    assert rows[("1", "obs")]["record_count"] == 3  # other sources unchanged
+    assert rows[("1", "obs")]["max_date"] == datetime.date(2024, 1, 10)
+
+
+def test_facility_config_null_value_beside_valid(spark, fleet, tmp_path):
+    """A NULL current_health_center_id beside a valid one: the NULL
+    sorts first and wins, its *1 coercion is site 0, and the name
+    resolves through location 0."""
+    catalog, _ = fleet
+    gp = [("current_health_center_id", None), ("current_health_center_id", "5"), ("other", "9")]
+    tables = _facility(spark, gp, [(5, "Epsilon Clinic"), (0, "Zero Ward")], [("2024-05-01", 0)])
+    cat = _with_facility(spark, catalog, tmp_path, "openmrs_fac5", tables)
+    _, rows = _dc_rows(cat)
+    assert rows[(None, "obs")]["facility_name"] == "Zero Ward"
+    assert rows[(None, "obs")]["record_count"] == 1
+    assert not any(fid == "5" for fid, _ in rows)
+    report, _ = etl_reconciliation_check(cat, fleet[1])
+    names = {r["site_name"] for r in report.collect() if r["site_id"] == 0}
+    assert names == {"Broken Config", "Zero Ward"}
+
+
+def test_int32_vs_int64_voided_across_sources(spark, fleet, tmp_path):
+    """``voided`` is int32 in one source and int64 in the others: the
+    per-table schemas cannot merge, and both checks still count every
+    source as before."""
+    catalog, wh = fleet
+    tables = _facility(
+        spark, _gp("6"), [(6, "Zeta Clinic")], [("2024-05-01", 0), ("2024-05-03", 1)], "int"
+    )
+    cat = _with_facility(spark, catalog, tmp_path, "openmrs_fac6", tables)
+    _, rows = _dc_rows(cat)
+    assert rows[("6", "obs")]["record_count"] == 2  # DC counts voided rows
+    assert rows[("6", "obs")]["max_date"] == datetime.date(2024, 5, 3)
+    assert rows[("1", "obs")]["record_count"] == 3
+    report, fan = etl_reconciliation_check(cat, wh)
+    assert (fan.attempted, fan.succeeded) == (4, 3)
+    got = {r["table_name"]: r["record_count_source"] for r in report.collect() if r["site_id"] == 6}
+    assert got == {
+        "obs": 1,
+        "encounter": 1,
+        "orders": 1,
+        "person": 2,
+        "patient": 2,
+        "patient_state": 2,  # no voided filter (PP:106)
+    }
+    rows = {(r["site_id"], r["table_name"]): r for r in report.collect()}
+    assert rows[(1, "obs")]["record_count_source"] == 3
+    assert rows[(1, "person")]["record_count_source"] == 3
+
+
+def test_catalog_inference_jobs_do_not_grow_with_sources(spark, fleet):
+    """Building DC and PP over 2 and over 3 surviving sources starts the
+    same number of Spark jobs: each table's schema is inferred once for
+    the whole fleet, not once per source."""
+    catalog, wh = fleet
+    sc = spark.sparkContext
+
+    def build_jobs(sources, group):
+        cat = ParquetDirCatalog(spark, sources)
+        sc.setJobGroup(group, "plan build only")
+        try:
+            loading_status_check(cat)
+            etl_reconciliation_check(cat, wh)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    three = {**catalog.sources, "openmrs_fac1_copy": catalog.sources["openmrs_fac1"]}
+    assert build_jobs(catalog.sources, "fleet-2") == build_jobs(three, "fleet-3")
