@@ -1,10 +1,12 @@
-"""Audited report sinks.
+"""Audited Parquet report sinks on local paths.
 
 The reference writes its DQA report with DROP + replace/append and then
 verifies with a post-write ``SELECT COUNT(*)``
 (``data_consistency_checks.py:163-168``, ``pre_and_post_etl_checks.py:245-247``).
 Write-audit is a first-class DQ primitive here (SURVEY.md §2.1 S9-S11):
-write, read back, count, and report expected vs observed.
+write, then report expected vs observed rows at the target, summed from
+the Parquet footers of its data files (no Spark job). Targets are local
+paths; a URI such as ``s3a://…`` raises ``ValueError`` before any write.
 
 Report frames are bounded by construction (one row per source × table /
 per group), so the sink is never the scale bottleneck; data-scale
@@ -14,8 +16,13 @@ outputs (e.g. deduped corpora) go through the same function with
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import os
+import shutil
+import uuid
+from dataclasses import dataclass, replace
+from urllib.parse import urlsplit
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -37,20 +44,16 @@ def write_report(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    fmt: str = "parquet",
     expected_count: int | None = None,
 ) -> WriteAudit:
-    """Write ``df`` to ``path`` and verify by re-counting the sink.
+    """Write ``df`` to ``path`` and audit the rows now there.
 
     ``mode='overwrite'`` reproduces DROP + ``if_exists='replace'``
     (``data_consistency_checks.py:163-165``); ``mode='append'`` the
-    PP sink (``pre_and_post_etl_checks.py:245-247``). The re-count is a
-    fresh scan of the written files, not a cached plan — it audits what
-    actually landed.
+    PP sink (``pre_and_post_etl_checks.py:245-247``), whose audit
+    counts the earlier rows too.
     """
-    df.write.mode(mode).format(fmt).save(path)
-    observed = _recount(df, path, fmt)
-    return WriteAudit(target=path, mode=mode, rows_written=observed, expected_rows=expected_count)
+    return _write(df, path, mode, [], expected_count)
 
 
 def write_partitioned(
@@ -58,7 +61,6 @@ def write_partitioned(
     path: str,
     partition_by: list[str],
     mode: str = "overwrite",
-    fmt: str = "parquet",
     expected_count: int | None = None,
 ) -> WriteAudit:
     """Hive-style partitioned export — the layout that makes downstream
@@ -72,32 +74,10 @@ def write_partitioned(
     With ``mode='overwrite'`` and
     ``spark.sql.sources.partitionOverwriteMode=dynamic`` (session
     default here), only partitions present in ``df`` are replaced —
-    the idempotent per-slice refresh a scheduled DQ job needs.
+    the idempotent per-slice refresh a scheduled DQ job needs. The
+    audit counts the untouched partitions too.
     """
-    df.write.mode(mode).format(fmt).partitionBy(*partition_by).save(path)
-    observed = _recount(df, path, fmt)
-    return WriteAudit(target=path, mode=mode, rows_written=observed, expected_rows=expected_count)
-
-
-def _recount(df: DataFrame, path: str, fmt: str) -> int:
-    """Rows now at ``path``: a fresh scan of the written files, read with
-    the written frame's schema so the scan starts no schema-inference
-    job of its own."""
-    return df.sparkSession.read.schema(df.schema).format(fmt).load(path).count()
-
-
-def write_table(
-    df: DataFrame,
-    table: str,
-    mode: str = "overwrite",
-    expected_count: int | None = None,
-) -> WriteAudit:
-    """``saveAsTable`` variant for catalog-managed warehouses."""
-    if mode == "overwrite":
-        df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-    df.write.mode(mode).saveAsTable(table)
-    observed = df.sparkSession.table(table).count()
-    return WriteAudit(target=table, mode=mode, rows_written=observed, expected_rows=expected_count)
+    return _write(df, path, mode, partition_by, expected_count)
 
 
 def merge_upsert(
@@ -105,7 +85,6 @@ def merge_upsert(
     target_path: str,
     updates: DataFrame,
     keys: list[str],
-    fmt: str = "parquet",
 ) -> WriteAudit:
     """Keyed MERGE (upsert) into a parquet target: rows matching on
     ``keys`` are replaced by the update row, unmatched update rows are
@@ -118,39 +97,59 @@ def merge_upsert(
     target; on a real deployment the same operator maps 1:1 onto Delta
     Lake / Iceberg ``MERGE INTO``, which replace the rewrite with a
     file-level transaction log — this function is the format-agnostic
-    semantic contract plus audit).
+    semantic contract plus audit). The old target waits renamed aside as
+    ``<target>__prev`` until the staging directory is in; the next call
+    restores it if a crash left the target missing, else deletes it.
 
     Scale: the anti-join shuffles on the merge keys (broadcast when the
     update batch is small — the common CDC case); only changed+kept
     rows rewrite. Partition the target so the rewrite is per-partition
     (pair with write_partitioned) rather than whole-table.
     """
-    import os
-    import shutil
-    import uuid
-
+    prev = f"{target_path}__prev"
+    if os.path.isdir(prev) and not os.path.exists(target_path):
+        os.replace(prev, target_path)
+    shutil.rmtree(prev, ignore_errors=True)
+    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
     updates = updates.persist()
     try:
-        if _path_has_data(target_path):
-            target = spark.read.format(fmt).load(target_path)
-            kept = target.join(updates.select(*keys), keys, "left_anti")
-            merged = kept.unionByName(updates)
-        else:
-            merged = updates
-        staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").format(fmt).save(staging)
-        if os.path.exists(target_path):
-            shutil.rmtree(target_path)
-        os.replace(staging, target_path)
+        merged = updates
+        if _data_files(target_path):
+            target = spark.read.parquet(target_path)
+            merged = target.join(updates.select(*keys), keys, "left_anti").unionByName(updates)
+        audit = _write(merged, staging, "overwrite", [], None)
     finally:
         updates.unpersist()
-    observed = spark.read.format(fmt).load(target_path).count()
-    return WriteAudit(target=target_path, mode="merge", rows_written=observed, expected_rows=None)
+    if os.path.exists(target_path):
+        os.replace(target_path, prev)
+    os.replace(staging, target_path)
+    shutil.rmtree(prev, ignore_errors=True)
+    return replace(audit, target=target_path, mode="merge")  # a rename keeps the rows
 
 
-def _path_has_data(path: str) -> bool:
-    import os
+def _write(
+    df: DataFrame, path: str, mode: str, partition_by: list[str], expected_count: int | None
+) -> WriteAudit:
+    """The one Parquet write, audited by the footer row counts of every
+    data file now at ``path``."""
+    if urlsplit(path).scheme:  # merge_upsert's staging path too
+        raise ValueError(f"sinks write local paths only, got {path!r}")
+    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    observed = sum(pq.read_metadata(f).num_rows for f in _data_files(path))
+    return WriteAudit(target=path, mode=mode, rows_written=observed, expected_rows=expected_count)
 
-    if not os.path.isdir(path):
-        return False
-    return any(name.endswith(".parquet") or name.startswith("part-") for name in os.listdir(path))
+
+def _data_files(path: str) -> list[str]:
+    """Data files under ``path`` by Spark's listing rule
+    (``HadoopFSUtils.shouldFilterOutPathName``): skip a name that starts
+    with ``.``, or with ``_`` and holds no ``=`` (``_SUCCESS``, ``.crc``),
+    so a ``_lang=en`` partition counts, unlike under ``pyarrow.dataset``."""
+
+    def data(name: str) -> bool:
+        return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if data(d)]
+        files += [os.path.join(root, n) for n in names if data(n)]
+    return files

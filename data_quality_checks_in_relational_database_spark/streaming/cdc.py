@@ -31,26 +31,13 @@ late-arrival horizon with a periodic filter-rewrite.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
 from data_quality_checks_in_relational_database_spark.streaming.epoch_state import (
-    latest_committed_version,
+    latest_state,
     version_dir as _state_dir,
 )
-
-
-def _latest_state(
-    spark: SparkSession, root: str, before: int | None = None
-) -> DataFrame | None:
-    """Newest committed (``_SUCCESS``-marked) state version as a
-    DataFrame; ``before`` gives the retry-safety bound — commit
-    protocol in :mod:`..streaming.epoch_state`."""
-    v = latest_committed_version(root, before=before)
-    return None if v is None else spark.read.parquet(_state_dir(root, v))
 
 
 def apply_cdc_batch(
@@ -69,7 +56,7 @@ def apply_cdc_batch(
     merges the batch, keeps latest-op-per-key including tombstones, and
     overwrites ``state_path/v<epoch_id>``."""
     spark = batch_df.sparkSession
-    prev = _latest_state(spark, state_path, before=int(epoch_id))
+    prev = latest_state(spark, state_path, before=int(epoch_id))
     merged = prev.unionByName(batch_df) if prev is not None else batch_df
     # keep tombstones: compact WITHOUT dropping deletes, preserving
     # the op column so later batches still out-order stale upserts
@@ -124,7 +111,7 @@ def read_state(
     delete_op: str = "delete",
 ) -> DataFrame:
     """Current live state: newest committed version minus tombstones."""
-    cur = _latest_state(spark, state_path)
+    cur = latest_state(spark, state_path)
     if cur is None:
         raise FileNotFoundError(f"no committed CDC state under {state_path}")
     return cur.filter(F.col(op_col) != delete_op)

@@ -9,7 +9,8 @@ hand-rolled copies — consolidated in r4 before a fourth drifted):
   parquet's own ``_SUCCESS`` when the version is a single table, an
   explicitly written ``_COMMIT`` (:func:`commit_version`, written
   LAST) when the version holds several tables;
-- readers resolve :func:`latest_committed_version`, and a retried
+- readers resolve :func:`latest_committed_version` (as a DataFrame:
+  :func:`latest_state`), and a retried
   epoch passes ``before=epoch_id`` so it rebuilds ``v<epoch>`` from
   ``v<epoch-1>`` + the batch, NEVER from its own half-committed
   output (the r2→r3 CDC state-loss fix: overwrite-mode lazily
@@ -24,6 +25,8 @@ effectively exactly-once state.
 from __future__ import annotations
 
 import os
+
+from pyspark.sql import DataFrame, SparkSession
 
 COMMIT_MARKER = "_COMMIT"
 SUCCESS_MARKER = "_SUCCESS"
@@ -51,6 +54,16 @@ def latest_committed_version(
         if os.path.exists(os.path.join(version_dir(root, v), marker)):
             return v
     return None
+
+
+def latest_state(
+    spark: SparkSession, root: str, before: int | None = None
+) -> DataFrame | None:
+    """Newest ``_SUCCESS``-committed single-table version under ``root``
+    as a DataFrame (``None`` when there is none); ``before`` is the
+    retry-safety bound of :func:`latest_committed_version`."""
+    v = latest_committed_version(root, before=before)
+    return None if v is None else spark.read.parquet(version_dir(root, v))
 
 
 def committed_versions(root: str, marker: str = SUCCESS_MARKER) -> list[int]:

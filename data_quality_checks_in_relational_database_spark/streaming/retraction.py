@@ -43,16 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.streaming.epoch_state import (
-    latest_committed_version,
+    latest_state,
     version_dir as _state_dir,
 )
-
-
-def _latest_state(
-    spark: SparkSession, root: str, before: int | None = None
-) -> DataFrame | None:
-    v = latest_committed_version(root, before=before)
-    return None if v is None else spark.read.parquet(_state_dir(root, v))
 
 
 def signed_delta(
@@ -83,7 +76,7 @@ def apply_retraction_batch(
     replayed directly in tests."""
     spark = batch_df.sparkSession
     delta = signed_delta(batch_df, key_cols, sign_col, measure_col)
-    prev = _latest_state(spark, state_path, before=int(epoch_id))
+    prev = latest_state(spark, state_path, before=int(epoch_id))
     merged = prev.unionByName(delta) if prev is not None else delta
     state = (
         merged.groupBy(*key_cols)
@@ -132,7 +125,7 @@ def read_view(spark: SparkSession, state_path: str) -> DataFrame:
     groups with positive multiplicity — pending retractions (negative
     ``n``) live in the state but never in the served view, matching the
     batch twin's ``WHERE n > 0``."""
-    cur = _latest_state(spark, state_path)
+    cur = latest_state(spark, state_path)
     if cur is None:
         raise FileNotFoundError(f"no committed retraction view under {state_path}")
     return cur.where(F.col("n") > 0)

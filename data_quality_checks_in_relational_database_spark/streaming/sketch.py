@@ -16,15 +16,13 @@ composes to exactly-once counters.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.operators.sketch import cms_counters
-from data_quality_checks_in_relational_database_spark.streaming.cdc import (
-    _latest_state,
-    _state_dir,
+from data_quality_checks_in_relational_database_spark.streaming.epoch_state import (
+    latest_state,
+    version_dir as _state_dir,
 )
 
 
@@ -41,7 +39,7 @@ def apply_cms_batch(
     ``streaming/cdc.py``), write ``state_path/v<epoch>``."""
     spark = batch_df.sparkSession
     batch_sketch = cms_counters(batch_df, key_col, depth, width)
-    prev = _latest_state(spark, state_path, before=int(epoch_id))
+    prev = latest_state(spark, state_path, before=int(epoch_id))
     merged = (
         batch_sketch.unionByName(prev) if prev is not None else batch_sketch
     )
@@ -77,7 +75,7 @@ def streaming_cms(
 
 def read_cms(spark: SparkSession, state_path: str) -> DataFrame:
     """Newest committed sketch: (row, bucket, cnt)."""
-    cur = _latest_state(spark, state_path)
+    cur = latest_state(spark, state_path)
     if cur is None:
         raise FileNotFoundError(f"no committed CMS state under {state_path}")
     return cur

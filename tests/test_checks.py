@@ -90,6 +90,54 @@ def test_write_report_audit(spark):
         audit2 = write_report(df, f"{d}/report", mode="append", expected_count=5)
         assert not audit2.ok and audit2.rows_written == 10  # append doubled
 
+
+def _jobs_in_group(spark, group, action):
+    """Spark jobs ``action`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_report_audit_starts_no_job(spark, tmp_path):
+    """The audit reads the row counts from the written files' footers:
+    ``write_report`` launches exactly the jobs of a bare parquet write
+    of the same (shuffled) frame, no recount scan."""
+    df = spark.range(24).groupBy((F.col("id") % 6).alias("g")).agg(F.sum("id").alias("s"))
+    bare = _jobs_in_group(
+        spark, "sinks-bare-write", lambda: df.write.parquet(str(tmp_path / "bare"))
+    )
+    audited = _jobs_in_group(
+        spark, "sinks-write-report", lambda: write_report(df, str(tmp_path / "report"))
+    )
+    assert bare > 0 and audited == bare
+
+
+@pytest.mark.parametrize("sink", ["write_report", "write_partitioned", "merge_upsert"])
+def test_sinks_reject_uri_paths_before_any_job(spark, sink):
+    """A non-local target fails at entry: no Spark job is started and no
+    audit of 0 rows is returned."""
+    from data_quality_checks_in_relational_database_spark.sources import sinks
+
+    df = spark.range(3).withColumnRenamed("id", "k")
+    path = "s3a://bucket/report"
+    calls = {
+        "write_report": lambda: sinks.write_report(df, path),
+        "write_partitioned": lambda: sinks.write_partitioned(df, path, ["k"]),
+        "merge_upsert": lambda: sinks.merge_upsert(spark, path, df, ["k"]),
+    }
+    with pytest.raises(ValueError, match="local paths"):
+        _jobs_in_group(spark, f"sinks-uri-{sink}", calls[sink])
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(f"sinks-uri-{sink}") == []
+
+
 def test_rule_violation_rows_tags_offenders(spark):
     """Side-output must name exactly the rules each bad row breaks,
     cap per-rule samples, and emit nothing for clean data."""

@@ -98,6 +98,25 @@ def test_write_partitioned_prunes_on_read(spark, tmp_path):
     assert back.filter(F.col("lang") == "en").count() == 1
 
 
+def test_write_partitioned_audits_underscore_partition_column(spark, tmp_path):
+    """A partition directory named ``_lang=…`` holds data (Spark's listing
+    rule keeps a ``_`` name that has ``=``): the audit counts its rows,
+    before and after an append, and the untouched partition's rows after
+    a dynamic overwrite."""
+    from data_quality_checks_in_relational_database_spark.sources.sinks import write_partitioned
+
+    path = str(tmp_path / "under")
+    df = spark.createDataFrame(
+        [(i, "en" if i % 2 == 0 else "fr") for i in range(20)], ["id", "_lang"]
+    )
+    audit = write_partitioned(df, path, ["_lang"], expected_count=20)
+    assert audit.ok and audit.rows_written == 20
+    appended = write_partitioned(df, path, ["_lang"], mode="append")
+    assert appended.rows_written == 40 == spark.read.parquet(path).count()
+    one_en = spark.createDataFrame([(100, "en")], ["id", "_lang"])
+    assert write_partitioned(one_en, path, ["_lang"]).rows_written == 21
+
+
 def test_merge_upsert(spark, tmp_path):
     from data_quality_checks_in_relational_database_spark.sources.sinks import merge_upsert
 
@@ -121,6 +140,67 @@ def test_merge_upsert(spark, tmp_path):
     assert audit2.rows_written == 4
     got2 = {tuple(r) for r in spark.read.parquet(target).collect()}
     assert got2 == got
+
+
+def test_merge_upsert_into_partitioned_target_keeps_carried_rows(spark, tmp_path):
+    """A target written by ``write_partitioned`` holds its files under
+    ``lang=…`` directories; the merge must see that data and carry the
+    unmatched rows, not replace the table with the update batch."""
+    from data_quality_checks_in_relational_database_spark.sources.sinks import (
+        merge_upsert,
+        write_partitioned,
+    )
+
+    target = str(tmp_path / "dim_by_lang")
+    schema = "id long, lang string, score double"
+    base = spark.createDataFrame([(1, "en", 10.0), (2, "fr", 20.0), (3, "en", 30.0)], schema)
+    write_partitioned(base, target, ["lang"])
+    update = spark.createDataFrame([(2, "fr", 21.0)], schema)
+    audit = merge_upsert(spark, target, update, ["id"])
+    assert audit.rows_written == 3
+    got = {(r.id, r.lang, r.score) for r in spark.read.parquet(target).collect()}
+    assert got == {(1, "en", 10.0), (2, "fr", 21.0), (3, "en", 30.0)}
+
+
+def test_merge_upsert_crash_mid_swap_keeps_previous_table(spark, tmp_path, monkeypatch):
+    """A crash after the old target is moved aside but before the
+    staging directory moves in leaves the old rows in ``<target>__prev``;
+    the next call restores them and ends where an uninterrupted run does."""
+    import os
+
+    from data_quality_checks_in_relational_database_spark.sources.sinks import merge_upsert
+
+    schema = "id long, name string, score double"
+    base = spark.createDataFrame([(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], schema)
+    updates = spark.createDataFrame([(2, "b2", 21.0), (4, "d", 40.0)], schema)
+
+    def rows(path):
+        return {tuple(r) for r in spark.read.parquet(path).collect()}
+
+    clean = str(tmp_path / "clean")
+    merge_upsert(spark, clean, base, ["id"])
+    merge_upsert(spark, clean, updates, ["id"])
+
+    target = str(tmp_path / "dim")
+    merge_upsert(spark, target, base, ["id"])
+    real_replace = os.replace
+
+    def crash_on_move_in(src, dst):
+        if "__staging_" in str(src) and str(dst) == target:
+            raise OSError("crash before the staging directory moved in")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_on_move_in)
+    with pytest.raises(OSError, match="crash before"):
+        merge_upsert(spark, target, updates, ["id"])
+    monkeypatch.undo()
+
+    assert not os.path.exists(target)
+    assert rows(f"{target}__prev") == {tuple(r) for r in base.collect()}
+    audit = merge_upsert(spark, target, updates, ["id"])
+    assert audit.rows_written == 4
+    assert rows(target) == rows(clean)
+    assert not os.path.exists(f"{target}__prev")
 
 
 def test_observed_write_metrics(spark, tmp_path):

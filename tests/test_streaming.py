@@ -593,10 +593,12 @@ def test_streaming_cdc_retry_idempotent(spark, tmp_path):
     — the retried write must not read its own half-committed output,
     and recovered state must be byte-identical to the pre-crash state."""
     from data_quality_checks_in_relational_database_spark.streaming.cdc import (
-        _latest_state,
         apply_cdc_batch,
         read_state,
         streaming_cdc_apply,
+    )
+    from data_quality_checks_in_relational_database_spark.streaming.epoch_state import (
+        latest_state,
     )
 
     d = tmp_path / "cdc_in"
@@ -619,7 +621,7 @@ def test_streaming_cdc_retry_idempotent(spark, tmp_path):
     )
     q.awaitTermination(120)
     before = {
-        tuple(r) for r in _latest_state(spark, state_path).orderBy("k").collect()
+        tuple(r) for r in latest_state(spark, state_path).orderBy("k").collect()
     }
     live_before = {r.k: r.v for r in read_state(spark, state_path, "op").collect()}
 
@@ -631,7 +633,7 @@ def test_streaming_cdc_retry_idempotent(spark, tmp_path):
     retry_batch = spark.createDataFrame(rows1, schema)
     apply_cdc_batch(retry_batch, 1, state_path, "k", "ts", "seq")
     after = {
-        tuple(r) for r in _latest_state(spark, state_path).orderBy("k").collect()
+        tuple(r) for r in latest_state(spark, state_path).orderBy("k").collect()
     }
     live_after = {r.k: r.v for r in read_state(spark, state_path, "op").collect()}
     assert after == before
