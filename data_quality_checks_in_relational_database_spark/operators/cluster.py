@@ -443,6 +443,8 @@ def label_propagation(
     # round's logical plan without a blocking job — the window's
     # exchange above each round serves the next round's join via
     # shuffle reuse inside one scheduled action. See graph.bfs_hops.
+    # The scope frees them once the result is checkpointed eagerly.
+    scope = CheckpointScope(pairs.sparkSession)
     both = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)
@@ -461,5 +463,8 @@ def label_propagation(
             .select(F.col("src").alias("node"), "label")
             .localCheckpoint(eager=False)
         )
+    mark = scope.ids()
+    labels_df = labels_df.localCheckpoint()
+    scope.free(mark)
     edges.unpersist()
     return labels_df

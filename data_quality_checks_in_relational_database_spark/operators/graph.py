@@ -1,4 +1,10 @@
-"""Iterative graph ranking over edge lists: weighted PageRank.
+"""Iterative graph ranking and structure passes over edge lists.
+
+:func:`pagerank` is :func:`personalized_pagerank` with every node a
+seed: both run one rank loop, :func:`_rank_replay` on the driver or
+:func:`_rank_loop` distributed, and pass in only their teleport term
+and dangling share. :func:`hits_scores` reads the same arc list
+(:func:`_arcs`).
 
 No counterpart in the reference (two single-table pandas/MySQL check
 scripts, `/root/reference/data_consistency_checks.py:43-77`,
@@ -31,125 +37,105 @@ Scale design (the 100 TB contract is a web-scale link graph):
   deterministic output for the differential oracle, bounded job
   count at any scale. The rank-sum probe doubles as a sanity
   invariant (total mass stays 1 ± fp-noise).
+- ``node`` takes the type of the input id columns on every path
+  (driver replay, distributed loop, empty result).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.session import CheckpointScope
 
 
-def _pagerank_driver(
-    spark: SparkSession, norm_rows, iters: int, damping: float, prec: int
-) -> DataFrame:
-    """Small-graph fast path: the identical recurrence over the
-    collected normalized arc list (src, dst, frac). The arc list is
-    already bounded by ``driver_threshold``; both the node order AND
-    the arc iteration order are sorted, so every float accumulation
-    runs in the same order run-to-run regardless of how ``collect()``
-    happened to order the partitions."""
-    norm_rows = sorted(norm_rows, key=lambda r: (r.src, r.dst))
-    nodes = sorted({r.src for r in norm_rows} | {r.dst for r in norm_rows})
-    n = len(nodes)
-    srcs = {r.src for r in norm_rows}
-    r = {v: 1.0 / n for v in nodes}
-    base = (1.0 - damping) / n
-    for _ in range(iters):
-        dang = sum(r[v] for v in nodes if v not in srcs)
-        contrib = {v: 0.0 for v in nodes}
-        for row in norm_rows:
-            contrib[row.dst] += r[row.src] * row.frac
-        r = {v: base + damping * (contrib[v] + dang / n) for v in nodes}
-    out = [(v, round(r[v], prec) + 0.0) for v in nodes]
-    schema = "node string, rank double"
-    if norm_rows and not isinstance(norm_rows[0].src, str):
-        schema = "node long, rank double"
-    return spark.createDataFrame(out, schema=schema)
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight_col: str | None = None,
-    iters: int = 10,
-    damping: float = 0.85,
-    prec: int = 6,
-    driver_threshold: int = 1_000_000,
-    probe_every: int = 5,
-) -> DataFrame:
-    """Weighted PageRank over an edge list; returns ``(node, rank)``
-    with ``rank`` rounded to ``prec`` decimals (both engines of the
-    differential gate sum doubles in different orders; the analytic
-    values agree to ~1e-15, so a fixed rounding makes the comparison
-    exact). Multi-edges are collapsed by summing their weights; an
-    absent ``weight_col`` means every edge counts 1.
-
-    Size-adaptive like :func:`..operators.cluster.connected_components`:
-    the aggregated arc list's size is already known from the eager
-    cache fill, and at or under ``driver_threshold`` arcs the fixed-
-    iteration recurrence runs as a driver-side numpy loop — identical
-    output, none of the per-round scheduler+shuffle floor (~0.6 s ×
-    rounds even for a 10-node transition graph). Above the threshold
-    the distributed loop below is the 100 TB web-graph contract.
-    """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    from pyspark import StorageLevel
-
+def _arcs(edges: DataFrame, src: str, dst: str, weight_col: str | None) -> DataFrame:
+    """One ``(src, dst, w)`` row per arc: null endpoints dropped,
+    multi-edges collapsed by summing their weights (an absent
+    ``weight_col`` counts every edge 1)."""
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    arcs = (
-        edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
-        )
+    return (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
+
+
+def _nodes(arcs: DataFrame) -> DataFrame:
+    """Distinct ``node`` over both arc endpoints, typed like the id
+    columns (their common type, as a union widens it)."""
+    return (
+        arcs.select(F.col("src").alias("node"))
+        .unionByName(arcs.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _result(spark: SparkSession, nodes: DataFrame, cols: str, rows=()) -> DataFrame:
+    """A driver-built (or empty) result whose ``node`` has the type the
+    distributed loop would give it: that of ``nodes`` (analysis only,
+    no job)."""
+    t = nodes.schema["node"].dataType.simpleString()
+    return spark.createDataFrame(list(rows), schema=f"node {t}, {cols}")
+
+
+def _normalized(edges: DataFrame, src: str, dst: str, weight_col: str | None) -> DataFrame:
+    """The arc list with each arc's transition probability ``frac``
+    (normalized once, so the per-round join needs no third table),
+    placed by ``src`` and persisted; the caller fills it eagerly."""
+    arcs = _arcs(edges, src, dst, weight_col)
     outw = arcs.groupBy("src").agg(F.sum("w").alias("tw"))
-    # normalize once: each arc carries its transition probability, so
-    # the per-iteration join needs no third table
-    norm = (
+    return (
         arcs.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("tw")).alias("frac"))
         .repartition("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_arcs = norm.count()  # eager cache fill: iterations must reuse, not rebuild
-    if n_arcs == 0:
-        norm.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [], schema=f"node {edges.schema[src].dataType.simpleString()}, rank double"
-        )
-    if n_arcs <= driver_threshold:
-        rows = norm.collect()
-        norm.unpersist()
-        return _pagerank_driver(
-            edges.sparkSession, rows, iters, damping, prec
-        )
 
-    nodes = (
-        norm.select(F.col("src").alias("node"))
-        .unionByName(norm.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_nodes = nodes.count()  # bounded scalar: graph order, not data volume
-    if n_nodes == 0:
-        norm.unpersist()
-        nodes.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [], schema=f"node {edges.schema[src].dataType.simpleString()}, rank double"
-        )
+
+def _rank_replay(norm_rows, nodes, r, teleport, dang_share, iters, damping, prec):
+    """Small-graph fast path: the rank recurrence
+    ``r[v] ← teleport(v) + d·(contrib[v] + dang_share(dang, v))`` over
+    the collected normalized arc list, from the start vector ``r`` over
+    the sorted ``nodes``. The arc list is already bounded by
+    ``driver_threshold``; both the node order AND the arc iteration
+    order are sorted, so every float accumulation runs in the same
+    order run-to-run regardless of how ``collect()`` happened to order
+    the partitions. Returns ``(node, rank)`` rows."""
+    arcs = sorted(norm_rows, key=lambda a: (a.src, a.dst))
+    srcs = {a.src for a in arcs}
+    for _ in range(iters):
+        dang = sum(r[v] for v in nodes if v not in srcs)
+        contrib = {v: 0.0 for v in nodes}
+        for a in arcs:
+            contrib[a.dst] += r[a.src] * a.frac
+        r = {v: teleport(v) + damping * (contrib[v] + dang_share(dang, v)) for v in nodes}
+    return [(v, round(r[v], prec) + 0.0) for v in nodes]
+
+
+def _rank_loop(
+    norm: DataFrame,
+    nodes: DataFrame,
+    r0: Column,
+    teleport: Column,
+    dang_share: Column,
+    iters: int,
+    damping: float,
+    prec: int,
+    probe_every: int,
+) -> DataFrame:
+    """The distributed rank recurrence
+    ``r ← teleport + d·(Pᵀr + dang_share)`` over the persisted
+    normalized arcs ``norm`` and the persisted ``nodes`` frame, from the
+    start ranks ``r0``. ``r0``, ``teleport`` and ``dang_share`` are
+    columns over ``nodes``; ``dang_share`` also reads the round's
+    dangling mass ``dang``. Frees ``norm``, ``nodes`` and every round's
+    checkpoint, and returns the eagerly checkpointed ``(node, rank)``."""
     srcs = norm.select("src").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-
-    scope = CheckpointScope(edges.sparkSession)
-    base = (1.0 - damping) / n_nodes
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r")).localCheckpoint(
-        eager=False
-    )
+    scope = CheckpointScope(norm.sparkSession)
+    ranks = nodes.select("node", r0.alias("r")).localCheckpoint(eager=False)
     for it in range(iters):
         # global dangling mass: 1-row aggregate, broadcast back onto
         # every node row (never a driver collect in the loop)
@@ -167,12 +153,9 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(base)
+                    teleport
                     + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dang") / F.lit(float(n_nodes))
-                    )
+                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dang_share)
                 ).alias("r"),
             )
             .localCheckpoint(eager=False)
@@ -205,37 +188,55 @@ def pagerank(
     return out
 
 
-def _ppr_driver(
-    spark: SparkSession, norm_rows, seed_set, iters: int, damping: float, prec: int
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    weight_col: str | None = None,
+    iters: int = 10,
+    damping: float = 0.85,
+    prec: int = 6,
+    driver_threshold: int = 1_000_000,
+    probe_every: int = 5,
 ) -> DataFrame:
-    """Small-graph fast path for :func:`personalized_pagerank` — the
-    identical recurrence over the collected normalized arc list, with
-    teleport mass confined to ``seed_set``. Sorted node and arc orders
-    make every float accumulation run-to-run identical (same rationale
-    as :func:`_pagerank_driver`)."""
-    norm_rows = sorted(norm_rows, key=lambda r: (r.src, r.dst))
-    nodes = sorted(
-        {r.src for r in norm_rows} | {r.dst for r in norm_rows} | set(seed_set)
+    """Weighted PageRank over an edge list; returns ``(node, rank)``
+    with ``rank`` rounded to ``prec`` decimals (both engines of the
+    differential gate sum doubles in different orders; the analytic
+    values agree to ~1e-15, so a fixed rounding makes the comparison
+    exact). Multi-edges are collapsed by summing their weights; an
+    absent ``weight_col`` means every edge counts 1. Each round is
+    ``r ← (1-d)/n + d·(Pᵀr + dang/n)``.
+
+    Size-adaptive like :func:`..operators.cluster.connected_components`:
+    the aggregated arc list's size is already known from the eager
+    cache fill, and at or under ``driver_threshold`` arcs the fixed-
+    iteration recurrence runs as a driver-side loop — identical
+    output, none of the per-round scheduler+shuffle floor (~0.6 s ×
+    rounds even for a 10-node transition graph). Above the threshold
+    the distributed loop is the 100 TB web-graph contract.
+    """
+    if probe_every < 1:
+        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
+    spark = edges.sparkSession
+    norm = _normalized(edges, src, dst, weight_col)
+    n_arcs = norm.count()  # eager cache fill: iterations must reuse, not rebuild
+    nodes = _nodes(norm)
+    if n_arcs == 0 or n_arcs <= driver_threshold:
+        rows = norm.collect()
+        norm.unpersist()
+        ids = sorted({a.src for a in rows} | {a.dst for a in rows})
+        n = len(ids)
+        out = _rank_replay(
+            rows, ids, {v: 1.0 / n for v in ids}, lambda v: (1.0 - damping) / n,
+            lambda dang, v: dang / n, iters, damping, prec,
+        )
+        return _result(spark, nodes, "rank double", out)
+    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    n = nodes.count()  # bounded scalar: graph order, not data volume
+    return _rank_loop(
+        norm, nodes, F.lit(1.0 / n), F.lit((1.0 - damping) / n),
+        F.col("dang") / F.lit(float(n)), iters, damping, prec, probe_every,
     )
-    srcs = {r.src for r in norm_rows}
-    ns = len(seed_set)
-    tele = {v: (1.0 / ns if v in seed_set else 0.0) for v in nodes}
-    r = dict(tele)
-    for _ in range(iters):
-        dang = sum(r[v] for v in nodes if v not in srcs)
-        contrib = {v: 0.0 for v in nodes}
-        for row in norm_rows:
-            contrib[row.dst] += r[row.src] * row.frac
-        r = {
-            v: (1.0 - damping) * tele[v]
-            + damping * (contrib[v] + dang * tele[v])
-            for v in nodes
-        }
-    out = [(v, round(r[v], prec) + 0.0) for v in nodes]
-    schema = "node string, rank double"
-    if nodes and not isinstance(nodes[0], str):
-        schema = "node long, rank double"
-    return spark.createDataFrame(out, schema=schema)
 
 
 def personalized_pagerank(
@@ -258,40 +259,20 @@ def personalized_pagerank(
     known-bad documents, conversion-adjacency of funnel states) that
     plain PageRank's global prior washes out. Dangling mass returns to
     the SEEDS (r_{t+1} = (1-d)·e_S + d·(Pᵀr + dang·e_S)), keeping
-    total mass exactly 1 — the invariant probe below asserts it.
+    total mass exactly 1 — the invariant probe asserts it.
 
-    Same size-adaptive physical strategy and lineage discipline as
-    :func:`pagerank`: at or under ``driver_threshold`` arcs the fixed
-    recurrence runs as a sorted driver loop; above it, each round is
-    one hash join + keyed aggregation over ``(node, rank)`` pairs with
-    the once-placed normalized arc list never re-shuffling, the
-    dangling scalar riding a 1-row broadcast, and ``localCheckpoint``
-    truncating lineage per round. Seeds absent from the edge list
-    still hold teleport mass (they are unioned into the node set).
+    Same size-adaptive strategy, driver replay and distributed loop as
+    :func:`pagerank`; only the teleport term and the dangling share
+    differ. Seeds absent from the edge list still hold teleport mass
+    (they are unioned into the node set).
     """
     if probe_every < 1:
         raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    from pyspark import StorageLevel
-
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    arcs = (
-        edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-    )
-    outw = arcs.groupBy("src").agg(F.sum("w").alias("tw"))
-    norm = (
-        arcs.join(outw, "src")
-        .select("src", "dst", (F.col("w") / F.col("tw")).alias("frac"))
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    spark = edges.sparkSession
+    norm = _normalized(edges, src, dst, weight_col)
     seed_frame = seeds.select(F.col(seed_col).alias("node")).distinct()
     n_arcs = norm.count()  # eager cache fill
-    spark = edges.sparkSession
+    all_nodes = _nodes(norm).unionByName(seed_frame).distinct()
     if n_arcs <= driver_threshold:
         # seed sets are release gates / query inputs — bounded by
         # contract, so the collect here is a driver-path prerequisite,
@@ -301,29 +282,22 @@ def personalized_pagerank(
         rows = norm.collect()
         norm.unpersist()
         if not seed_set:
-            return spark.createDataFrame(
-                [],
-                schema=f"node {edges.schema[src].dataType.simpleString()}, rank double",
-            )
-        return _ppr_driver(spark, rows, seed_set, iters, damping, prec)
+            return _result(spark, all_nodes, "rank double")
+        ids = sorted({a.src for a in rows} | {a.dst for a in rows} | seed_set)
+        tele = {v: (1.0 / len(seed_set) if v in seed_set else 0.0) for v in ids}
+        out = _rank_replay(
+            rows, ids, tele, lambda v: (1.0 - damping) * tele[v],
+            lambda dang, v: dang * tele[v], iters, damping, prec,
+        )
+        return _result(spark, all_nodes, "rank double", out)
 
-    graph_nodes = (
-        norm.select(F.col("src").alias("node"))
-        .unionByName(norm.select(F.col("dst").alias("node")))
-        .distinct()
-    )
     n_seeds = seed_frame.count()
     if n_seeds == 0:
         norm.unpersist()
-        return spark.createDataFrame(
-            [],
-            schema=f"node {edges.schema[src].dataType.simpleString()}, rank double",
-        )
+        return _result(spark, all_nodes, "rank double")
     # teleport vector: one row per node, 1/|S| on seeds, 0 elsewhere
     nodes = (
-        graph_nodes.unionByName(seed_frame)
-        .distinct()
-        .join(seed_frame.withColumn("is_seed", F.lit(True)), "node", "left")
+        all_nodes.join(seed_frame.withColumn("is_seed", F.lit(True)), "node", "left")
         .select(
             "node",
             F.when(F.col("is_seed"), F.lit(1.0 / n_seeds))
@@ -333,53 +307,33 @@ def personalized_pagerank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     nodes.count()
-    srcs = norm.select("src").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-
-    scope = CheckpointScope(spark)
-    ranks = nodes.select("node", F.col("tele").alias("r")).localCheckpoint(
-        eager=False
+    return _rank_loop(
+        norm, nodes, F.col("tele"), F.lit(1.0 - damping) * F.col("tele"),
+        F.col("dang") * F.col("tele"), iters, damping, prec, probe_every,
     )
-    for it in range(iters):
-        dang = ranks.join(srcs, ranks["node"] == srcs["src"], "left_anti").agg(
-            F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang")
+
+
+def _undirected(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """The undirected edge list: one ``(a, b)`` row per edge with
+    ``a < b``, self-loops dropped, duplicates collapsed."""
+    return (
+        pairs.select(
+            F.least(F.col(id_a), F.col(id_b)).alias("a"),
+            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
         )
-        contribs = (
-            norm.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("frac")).alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("tele")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dang") * F.col("tele")
-                    )
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # batched invariant probe — same argument as pagerank: fixed
-        # rounds, mass conserved analytically, lineage still truncated
-        # per round; a skipped probe removes a job + full rank-frame
-        # pass + driver barrier per round
-        if (it + 1) % probe_every == 0 or it == iters - 1:
-            total = ranks.agg(F.sum("r")).collect()[0][0]
-            # ValueError, not assert: must hold under -O too
-            if abs(total - 1.0) >= 1e-6:
-                raise ValueError(f"PPR mass drifted: {total}")
-    mark = scope.ids()
-    out = ranks.select("node", F.round(F.col("r"), prec).alias("rank")).localCheckpoint()
-    scope.free(mark)
-    norm.unpersist()
-    nodes.unpersist()
-    srcs.unpersist()
-    return out
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(n, deg)``: each node's degree in the undirected list ``e``."""
+    return (
+        e.select(F.col("a").alias("n"))
+        .unionByName(e.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
 
 
 def modularity_terms(
@@ -430,15 +384,7 @@ def modularity_terms(
                 f"modularity_terms needs integral ids/labels; {what} "
                 f"column {col!r} is {t}"
             )
-    e = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()  # referenced 3x; bounded survivor set
-    )
+    e = _undirected(pairs, id_a, id_b).localCheckpoint()  # referenced 3x; bounded survivor set
     lab = labels.select(
         F.col(node_col).alias("n"), F.col(label_col).alias("c")
     )
@@ -464,14 +410,9 @@ def modularity_terms(
         .groupBy(F.col("ca").alias("community"))
         .agg(F.count(F.lit(1)).alias("intra_edges"))
     )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
     per_comm = (
-        deg.join(lab, "n", "left")
+        _degrees(e)
+        .join(lab, "n", "left")
         .select(F.coalesce("c", F.col("n")).alias("community"), "deg")
         .groupBy("community")
         .agg(
@@ -516,24 +457,11 @@ def degree_assortativity(
     ``(n_nodes, n_edges, assortativity)``; NULL coefficient when the
     degree variance is zero (regular graph).
     """
-    e = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        # lazy (r8): the distinct's shuffle output serves all four plan
-        # references (degree union ×2, sym union ×2) inside one action;
-        # no blocking pre-job. See bfs_hops.
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    # lazy (r8): the distinct's shuffle output serves all four plan
+    # references (degree union ×2, sym union ×2) inside one action;
+    # no blocking pre-job. See bfs_hops.
+    e = _undirected(pairs, id_a, id_b).localCheckpoint(eager=False)
+    deg = _degrees(e)
     sym = e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionByName(
         e.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -584,19 +512,10 @@ def triangle_counts(
     Output: (node, degree, triangles, clustering_coeff) for every node
     in the edge list; coeff = 2T / (d(d-1)), NULL when degree < 2.
     """
-    e = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("lo"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("hi"),
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint()  # referenced 5x below; bounded survivor set
-    )
-    e1 = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-    e2 = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    e3 = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])  # one row per triangle a<b<c
+    e = _undirected(pairs, id_a, id_b).localCheckpoint()  # referenced 5x below
+    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
+    e3 = e.select("a", F.col("b").alias("c"))
+    tri = e.join(e2, "b").join(e3, ["a", "c"])  # one row per triangle a<b<c
     per_node = (
         tri.select(F.col("a").alias("node"))
         .unionByName(tri.select(F.col("b").alias("node")))
@@ -604,12 +523,7 @@ def triangle_counts(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    deg = (
-        e.select(F.col("lo").alias("node"))
-        .unionByName(e.select(F.col("hi").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _degrees(e).select(F.col("n").alias("node"), F.col("deg").alias("degree"))
     return deg.join(per_node, "node", "left").select(
         "node",
         F.col("degree").cast("long").alias("degree"),
@@ -769,11 +683,12 @@ def kcore_peel(
     )
 
 
-def _hits_driver(spark: SparkSession, arc_rows, iters: int, prec: int) -> DataFrame:
+def _hits_replay(arc_rows, iters: int, prec: int) -> list[tuple]:
     """Small-graph fast path for :func:`hits_scores`: the identical
     recurrence over the collected arc list, sorted node and arc orders
     (run-to-run identical float accumulation — the
-    :func:`_pagerank_driver` rationale)."""
+    :func:`_rank_replay` rationale). Returns ``(node, hub, authority)``
+    rows."""
     arcs = sorted(arc_rows, key=lambda r: (r.src, r.dst))
     nodes = sorted({r.src for r in arcs} | {r.dst for r in arcs})
     n = len(nodes)
@@ -790,11 +705,7 @@ def _hits_driver(spark: SparkSession, arc_rows, iters: int, prec: int) -> DataFr
             nh[r.src] += auth[r.dst] * r.w
         sh = sum(nh[v] for v in nodes)
         hub = {v: (nh[v] / sh if sh > 0 else 0.0) for v in nodes}
-    out = [(v, round(hub[v], prec) + 0.0, round(auth[v], prec) + 0.0) for v in nodes]
-    schema = "node string, hub double, authority double"
-    if nodes and not isinstance(nodes[0], str):
-        schema = "node long, hub double, authority double"
-    return spark.createDataFrame(out, schema=schema)
+    return [(v, round(hub[v], prec) + 0.0, round(auth[v], prec) + 0.0) for v in nodes]
 
 
 def hits_scores(
@@ -816,7 +727,7 @@ def hits_scores(
     "states important flows land on" (authorities), which one PageRank
     score conflates.
 
-    Same size-adaptive strategy as :func:`pagerank`: ≤
+    Same size-adaptive strategy and arc list as :func:`pagerank`: ≤
     ``driver_threshold`` arcs run the fixed recurrence as a sorted
     driver loop; above it, each half-step is one hash join + keyed
     aggregation over ``(node, score)`` pairs against the once-placed
@@ -827,36 +738,22 @@ def hits_scores(
     """
     if probe_every < 1:
         raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    from pyspark import StorageLevel
-
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     arcs = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
+        _arcs(edges, src, dst, weight_col)
         .repartition("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_arcs = arcs.count()
     spark = edges.sparkSession
-    if n_arcs == 0:
-        arcs.unpersist()
-        t = edges.schema[src].dataType.simpleString()
-        return spark.createDataFrame(
-            [], schema=f"node {t}, hub double, authority double"
-        )
-    if n_arcs <= driver_threshold:
+    nodes = _nodes(arcs)
+    if n_arcs == 0 or n_arcs <= driver_threshold:
         rows = arcs.collect()
         arcs.unpersist()
-        return _hits_driver(spark, rows, iters, prec)
+        return _result(
+            spark, nodes, "hub double, authority double", _hits_replay(rows, iters, prec)
+        )
 
-    nodes = (
-        arcs.select(F.col("src").alias("node"))
-        .unionByName(arcs.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
     n_nodes = nodes.count()
 
     # per-round localCheckpoints otherwise outlive the call

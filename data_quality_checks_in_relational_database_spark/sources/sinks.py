@@ -99,7 +99,10 @@ def merge_upsert(
     file-level transaction log — this function is the format-agnostic
     semantic contract plus audit). The old target waits renamed aside as
     ``<target>__prev`` until the staging directory is in; the next call
-    restores it if a crash left the target missing, else deletes it.
+    restores it if a crash left the target missing, else deletes it. A
+    staging directory whose write or move-in fails is removed before the
+    error propagates. A target partitioned by ``col=value`` directories
+    stays partitioned by the same columns.
 
     Scale: the anti-join shuffles on the merge keys (broadcast when the
     update batch is small — the common CDC case); only changed+kept
@@ -113,16 +116,22 @@ def merge_upsert(
     staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
     updates = updates.persist()
     try:
-        merged = updates
-        if _data_files(target_path):
+        merged, partition_by = updates, []
+        files = _data_files(target_path)
+        if files:
             target = spark.read.parquet(target_path)
             merged = target.join(updates.select(*keys), keys, "left_anti").unionByName(updates)
-        audit = _write(merged, staging, "overwrite", [], None)
+            rel = os.path.relpath(os.path.dirname(files[0]), target_path)
+            partition_by = [d.split("=", 1)[0] for d in rel.split(os.sep) if "=" in d]
+        audit = _write(merged, staging, "overwrite", partition_by, None)
+        if os.path.exists(target_path):
+            os.replace(target_path, prev)
+        os.replace(staging, target_path)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     finally:
         updates.unpersist()
-    if os.path.exists(target_path):
-        os.replace(target_path, prev)
-    os.replace(staging, target_path)
     shutil.rmtree(prev, ignore_errors=True)
     return replace(audit, target=target_path, mode="merge")  # a rename keeps the rows
 

@@ -76,3 +76,16 @@ def assert_matches_oracle(spark_df, duck_con, sql):
         (a, b) for a, b in zip(s_vals, d_vals) if a != b
     ]
     assert not mismatches, f"{len(mismatches)} mismatching rows; first: {mismatches[0]}"
+
+
+def jobs_in_group(spark, group, action):
+    """Spark jobs ``action`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -14,6 +14,7 @@ from data_quality_checks_in_relational_database_spark.operators.checks import re
 from data_quality_checks_in_relational_database_spark.operators.fanout import SOURCE_COL, run_fanout
 from data_quality_checks_in_relational_database_spark.sources.catalog import SlicedFleetCatalog
 from data_quality_checks_in_relational_database_spark.sources.sinks import write_report
+from tests.conftest import jobs_in_group
 
 
 def test_reconcile_null_variance(spark):
@@ -91,28 +92,15 @@ def test_write_report_audit(spark):
         assert not audit2.ok and audit2.rows_written == 10  # append doubled
 
 
-def _jobs_in_group(spark, group, action):
-    """Spark jobs ``action`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_write_report_audit_starts_no_job(spark, tmp_path):
     """The audit reads the row counts from the written files' footers:
     ``write_report`` launches exactly the jobs of a bare parquet write
     of the same (shuffled) frame, no recount scan."""
     df = spark.range(24).groupBy((F.col("id") % 6).alias("g")).agg(F.sum("id").alias("s"))
-    bare = _jobs_in_group(
+    bare = jobs_in_group(
         spark, "sinks-bare-write", lambda: df.write.parquet(str(tmp_path / "bare"))
     )
-    audited = _jobs_in_group(
+    audited = jobs_in_group(
         spark, "sinks-write-report", lambda: write_report(df, str(tmp_path / "report"))
     )
     assert bare > 0 and audited == bare
@@ -132,7 +120,7 @@ def test_sinks_reject_uri_paths_before_any_job(spark, sink):
         "merge_upsert": lambda: sinks.merge_upsert(spark, path, df, ["k"]),
     }
     with pytest.raises(ValueError, match="local paths"):
-        _jobs_in_group(spark, f"sinks-uri-{sink}", calls[sink])
+        jobs_in_group(spark, f"sinks-uri-{sink}", calls[sink])
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup(f"sinks-uri-{sink}") == []

@@ -195,12 +195,66 @@ def test_merge_upsert_crash_mid_swap_keeps_previous_table(spark, tmp_path, monke
         merge_upsert(spark, target, updates, ["id"])
     monkeypatch.undo()
 
+    assert not [p for p in os.listdir(tmp_path) if "__staging_" in p]
     assert not os.path.exists(target)
     assert rows(f"{target}__prev") == {tuple(r) for r in base.collect()}
     audit = merge_upsert(spark, target, updates, ["id"])
     assert audit.rows_written == 4
     assert rows(target) == rows(clean)
     assert not os.path.exists(f"{target}__prev")
+
+
+def test_merge_upsert_failed_staging_write_leaves_no_staging_dir(spark, tmp_path, monkeypatch):
+    """A staging write that raises after its files landed (here: the
+    footer audit) makes the merge remove its staging directory and
+    re-raise; the target keeps its rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_quality_checks_in_relational_database_spark.sources.sinks import merge_upsert
+
+    schema = "id long, name string"
+    target = str(tmp_path / "dim")
+    merge_upsert(spark, target, spark.createDataFrame([(1, "a")], schema), ["id"])
+
+    def unreadable_footer(path):
+        raise OSError(f"unreadable footer: {path}")
+
+    monkeypatch.setattr(pq, "read_metadata", unreadable_footer)
+    with pytest.raises(OSError, match="unreadable footer"):
+        merge_upsert(spark, target, spark.createDataFrame([(2, "b")], schema), ["id"])
+    monkeypatch.undo()
+    assert sorted(os.listdir(tmp_path)) == ["dim"]
+    assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(1, "a")]
+
+
+def test_merge_upsert_keeps_partitioned_target_partitioned(spark, tmp_path):
+    """A target written with ``partition_by=["lang"]`` keeps its
+    ``lang=…`` directories through a merge, each holding its own rows."""
+    import os
+
+    from data_quality_checks_in_relational_database_spark.sources.sinks import (
+        merge_upsert,
+        write_partitioned,
+    )
+
+    target = str(tmp_path / "dim_by_lang")
+    schema = "id long, lang string, score double"
+    base = spark.createDataFrame([(1, "en", 10.0), (2, "fr", 20.0), (3, "en", 30.0)], schema)
+    write_partitioned(base, target, ["lang"])
+    update = spark.createDataFrame([(2, "fr", 21.0), (4, "de", 40.0)], schema)
+    assert merge_upsert(spark, target, update, ["id"]).rows_written == 4
+    assert sorted(d for d in os.listdir(target) if "=" in d) == ["lang=de", "lang=en", "lang=fr"]
+
+    def ids(lang):
+        part = spark.read.parquet(os.path.join(target, f"lang={lang}"))
+        assert part.columns == ["id", "score"]
+        return sorted((r.id, r.score) for r in part.collect())
+
+    assert ids("en") == [(1, 10.0), (3, 30.0)]
+    assert ids("fr") == [(2, 21.0)]
+    assert ids("de") == [(4, 40.0)]
 
 
 def test_observed_write_metrics(spark, tmp_path):

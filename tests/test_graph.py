@@ -341,3 +341,48 @@ def test_hits_distributed_path_equals_driver_path(spark):
 def test_hits_empty_graph(spark):
     df = spark.createDataFrame([], "src string, dst string, w double")
     assert hits_scores(df, weight_col="w").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# One rank loop: result typing and job count on every path
+# ---------------------------------------------------------------------------
+
+from pyspark.sql.types import IntegerType  # noqa: E402
+
+from tests.conftest import jobs_in_group  # noqa: E402
+
+_RANKERS = {
+    "pagerank": lambda e, s, **kw: pagerank(e, weight_col="w", **kw),
+    "ppr": lambda e, s, **kw: personalized_pagerank(e, s, weight_col="w", **kw),
+    "hits": lambda e, s, **kw: hits_scores(e, weight_col="w", **kw),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RANKERS))
+def test_node_typed_from_input_ids_on_every_path(spark, op):
+    """The driver replay, the distributed loop and the empty result all
+    type ``node`` like the int32 input ids."""
+    schema = "src int, dst int, w double"
+    edges = spark.createDataFrame([(1, 2, 1.0), (2, 3, 1.0), (3, 1, 2.0), (1, 4, 1.0)], schema)
+    seeds = spark.createDataFrame([(1,)], "node int")
+    no_edges = spark.createDataFrame([], schema)
+    no_seeds = spark.createDataFrame([], "node int")
+    rank = _RANKERS[op]
+    driver = rank(edges, seeds)
+    dist = rank(edges, seeds, driver_threshold=0)
+    empty = rank(no_edges, no_seeds)
+    assert empty.count() == 0
+    assert driver.schema["node"].dataType == IntegerType()
+    assert driver.dtypes == dist.dtypes == empty.dtypes
+
+
+@pytest.mark.parametrize("op, jobs", [("pagerank", 78), ("ppr", 84)])
+def test_forced_distributed_rank_job_count(spark, op, jobs):
+    """Spark jobs of a forced-distributed call plus its collect on a
+    tiny graph. PageRank shares PPR's loop but not its seed work (the
+    seed count and the teleport-vector fill), so it stays 6 jobs below
+    PPR; a seed join or an extra probe in the shared loop moves both."""
+    edges = spark.createDataFrame(_PPR_EDGES, "src string, dst string, w double")
+    seeds = spark.createDataFrame([("a",)], "node string")
+    run = lambda: _RANKERS[op](edges, seeds, driver_threshold=0).collect()  # noqa: E731
+    assert jobs_in_group(spark, f"forced-distributed-{op}", run) == jobs

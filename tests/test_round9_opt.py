@@ -223,3 +223,19 @@ def test_hashed_linear_score_rejects_clashing_keep_cols(spark, bad):
     assert hashed_linear_score(docs, keep_cols=["lang"]).columns == [
         "doc_id", "lang", "n_tokens", "score", "keep",
     ]
+
+
+def test_label_propagation_distributed_frees_round_checkpoints(spark):
+    """The distributed rounds' lazy checkpoints and the edge cache are
+    released once the result is checkpointed; at most the result's own
+    RDD stays registered, and it still reads correctly."""
+    _sweep(spark)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 5)], schema="doc_id_a long, doc_id_b long"
+    )
+    before = _n_persistent(spark)
+    got = cluster.label_propagation(pairs, rounds=4, driver_threshold=0).collect()
+    assert _n_persistent(spark) - before <= 1
+    want = cluster.label_propagation(pairs, rounds=4).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    _sweep(spark)
