@@ -16,8 +16,15 @@ graph diameter. Duplicate clusters in real corpora are shallow (near
 for adversarial chain-shaped graphs use
 :func:`connected_components_star` (Kiveris et al., SoCC'14), which
 converges in O(log² n) rounds with the same per-round shuffle shape.
-Each round materializes (persist + count) so the driver sees the
-converged flag and lineage stays bounded.
+Each round's lineage is truncated with a checkpoint, and a label-sum
+probe tells the driver when the fixed point is reached.
+
+Every operator here runs on the skeleton of :mod:`.graph`: one
+``CheckpointScope`` per call, the size switch ``graph._switch`` (driver
+union-find / dict loop at or under ``driver_threshold`` edges), driver
+and empty results built by ``graph._result`` (``node`` and
+``cluster_id``/``label`` typed like the input ids), and one exit that
+frees every pin and round checkpoint except the kept result.
 """
 
 from __future__ import annotations
@@ -25,7 +32,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_quality_checks_in_relational_database_spark.operators.graph import (
+    _nodes,
+    _result,
+    _switch,
+)
 from data_quality_checks_in_relational_database_spark.session import CheckpointScope
+
+#: Convergence-probe cadence of :func:`connected_components`: every
+#: round for the first PROBE_WARMUP rounds, then every PROBE_STRIDE.
+PROBE_WARMUP = 2
+PROBE_STRIDE = 4
 
 
 def connected_components(
@@ -34,181 +51,142 @@ def connected_components(
     id_b: str = "doc_id_b",
     max_iter: int = 25,
     driver_threshold: int = 1_000_000,
-    probe_warmup: int = 2,
-    probe_stride: int = 4,
 ) -> DataFrame:
     """Label every node in the pair graph with its component's minimum
     id. Output: ``(node, cluster_id)`` — one row per node that appears
-    in at least one pair.
+    in at least one pair, both typed like the input ids.
 
     Min-label propagation: ``label(v) ← min(label(v), min over
     neighbors' labels)`` until a fixed point. Exact (no approximation);
     raises if ``max_iter`` rounds don't converge rather than returning
     a partial labeling.
 
-    Size-adaptive physical strategy (the broadcast-join-threshold
-    pattern applied to iteration): the edge list is the OUTPUT of the
-    dedup funnel — after banding + exact verification it is orders of
-    magnitude smaller than the corpus, and its count is already known
-    (the eager cache-fill below). At or under ``driver_threshold``
-    edges the component labeling runs as a driver-side union-find
-    (microseconds, zero extra jobs) — identical output, and the
-    iterative path's per-round scheduler+shuffle floor (~0.2 s × rounds
-    even for 100 edges) disappears. Above the threshold the distributed
-    min-label loop runs unchanged; that path is the 100 TB contract,
-    the union-find is the small-graph fast path.
+    Size-adaptive through :func:`.graph._switch` (the broadcast-join-
+    threshold pattern applied to iteration): the edge list is the
+    OUTPUT of the dedup funnel — after banding + exact verification it
+    is orders of magnitude smaller than the corpus. At or under
+    ``driver_threshold`` edges the labeling runs as a driver-side
+    union-find (one count + one collect, microseconds of driver work)
+    with identical output. Above the threshold the distributed
+    min-label loop runs; that path is the 100 TB contract.
     """
-    if probe_stride < 1 or probe_warmup < 0:
-        raise ValueError(
-            f"need probe_stride >= 1 and probe_warmup >= 0, got {probe_stride}, {probe_warmup}"
+    spark = pairs.sparkSession
+    with CheckpointScope(spark) as scope:
+        # The pair list is referenced 4× below (forward + reversed
+        # edges, each unioned with self-loops derived from them); pairs
+        # usually arrive as an EXPENSIVE lineage (a whole LSH pipeline),
+        # and union branches do not share subexpression results — the
+        # switch pins the tiny (id, id) projection and fills it in its
+        # own job BEFORE any self-referencing union reads it (left to
+        # the 4-branch union, the branches hit the unfilled cache
+        # concurrently and serialize on block locks: measured 2-6×
+        # run-to-run variance, up to 18 s for a 256-edge graph).
+        edges, rows = _switch(
+            scope,
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+            driver_threshold,
         )
-    from pyspark import StorageLevel
+        if rows is not None:
+            parent: dict[int, int] = {}
 
-    # The pair list is referenced 4× below (forward + reversed edges,
-    # each unioned with self-loops derived from them); pairs usually
-    # arrive as an EXPENSIVE lineage (a whole LSH pipeline), and union
-    # branches do not share subexpression results — persist the tiny
-    # (id, id) projection once so the upstream pipeline runs once.
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Materialize the persisted edge list EAGERLY, in its own job,
-    # before any self-referencing union is built over it. If the first
-    # thing that computes `edges` is the 4-branch union below, the
-    # branches hit the not-yet-filled cache concurrently and serialize
-    # on block locks underneath a deep shuffle DAG — measured 2-6×
-    # run-to-run variance (up to 18s for a 256-edge graph at sf0.1);
-    # with the eager count the loop is stable sub-second per round.
-    # The count also feeds nothing else: it exists to fill the cache.
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
-        rows = edges.collect()
-        edges.unpersist()
-        parent: dict[int, int] = {}
+            def find(x: int) -> int:
+                root = x
+                while parent[root] != root:
+                    root = parent[root]
+                while parent[x] != root:  # path compression
+                    parent[x], x = root, parent[x]
+                return root
 
-        def find(x: int) -> int:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            a, b = r.src, r.dst
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min keeps the invariant root == component min
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        out = [(n, find(n)) for n in parent]
-        return pairs.sparkSession.createDataFrame(
-            out, schema="node long, cluster_id long"
+            for r in rows:
+                a, b = r.src, r.dst
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    # union by min keeps the invariant root == component min
+                    if ra < rb:
+                        parent[rb] = ra
+                    else:
+                        parent[ra] = rb
+            out = [(n, find(n)) for n in parent]
+            return _result(spark, _nodes(edges), "cluster_id {id}", out)
+        both = edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    both = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # Self-loops make each round a SINGLE join against the previous
-    # labels: new_label(v) = min over {labels of v's neighbors} ∪
-    # {label of v} collapses to one edge⋈label aggregation.
-    nodes = both.select("src").distinct()
-    sym = (
-        both.unionByName(nodes.select("src", F.col("src").alias("dst")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        # Self-loops make each round a SINGLE join against the previous
+        # labels: new_label(v) = min over {labels of v's neighbors} ∪
+        # {label of v} collapses to one edge⋈label aggregation.
+        nodes = both.select("src").distinct()
+        sym = scope.pin(both.unionByName(nodes.select("src", F.col("src").alias("dst"))))
 
-    # Two iterative-Spark traps, both load-bearing here:
-    # 1. Lineage MUST be truncated every round (localCheckpoint — the
-    #    plan becomes a flat LogicalRDD). Mere persist() keeps the full
-    #    logical chain, and Catalyst's analysis/constraint propagation
-    #    over a depth-k self-join chain blows up super-linearly —
-    #    observed driver heap OOM near round ~10 on a 12-node toy graph.
-    #    On clusters with executor churn use reliable checkpoint()
-    #    instead (fault-tolerant, slower).
-    # 2. Checkpoint blocks are NOT freed by unpersist()/clearCache();
-    #    left alone they accumulate across calls and degrade the whole
-    #    executor (observed: unrelated queries 2× slower after a few
-    #    calls). A CheckpointScope around the loop frees every
-    #    intermediate checkpoint, keeping only the one backing the
-    #    returned frame.
+        # Lineage MUST be truncated every round (localCheckpoint — the
+        # plan becomes a flat LogicalRDD). Mere persist() keeps the full
+        # logical chain, and Catalyst's analysis/constraint propagation
+        # over a depth-k self-join chain blows up super-linearly —
+        # observed driver heap OOM near round ~10 on a 12-node toy
+        # graph. On clusters with executor churn use reliable
+        # checkpoint() instead (fault-tolerant, slower). The scope frees
+        # every round's checkpoint once the result is kept.
 
-    def _label_sum(df: DataFrame):
-        # one-job materialize-and-probe: per-node min labels only ever
-        # DECREASE, so the global label sum is strictly decreasing
-        # until the fixed point — comparing sums replaces a whole
-        # join-and-count convergence job with a scalar agg on the same
-        # pass that fills the (lazy) checkpoint. decimal(38,0) keeps
-        # the sum exact for any realistic id magnitude × node count.
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+        def _label_sum(df: DataFrame):
+            # one-job materialize-and-probe: per-node min labels only
+            # ever DECREASE, so the global label sum is strictly
+            # decreasing until the fixed point — comparing sums replaces
+            # a whole join-and-count convergence job with a scalar agg
+            # on the same pass that fills the (lazy) checkpoint.
+            # decimal(38,0) keeps the sum exact for any realistic id
+            # magnitude × node count.
+            return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    # Convergence-probe cadence: the label-sum probe is one scheduled
-    # job + a full pass over the node frame + a driver barrier PER
-    # ROUND. Because per-node min labels only ever DECREASE, equal sums
-    # at ANY two probe rounds t1 < t2 prove every round in between was
-    # already the fixed point (the sums are monotone non-increasing, so
-    # equal endpoints pin the whole chain) — probes need not be
-    # consecutive rounds. Schedule: every round for the first
-    # ``probe_warmup`` rounds (typical near-dup graphs have tiny
-    # diameter, so convergence is usually caught here with ZERO wasted
-    # propagation rounds), then every ``probe_stride`` rounds (long-
-    # chain graphs stop paying a barrier per round; worst case
-    # probe_stride-1 extra propagation rounds past the fixed point,
-    # each an idempotent no-change join). Probes at max_iter-1 and
-    # max_iter are always included, which makes the raise contract
-    # EXACTLY the eager schedule's: converged iff the fixed point is
-    # reached by round max_iter-1. (probe_stride=1 reproduces the
-    # probe-every-round schedule bit for bit.)
-    probe_rounds = set(range(1, min(probe_warmup, max_iter) + 1))
-    r = probe_warmup
-    while r < max_iter:
-        r += probe_stride
-        probe_rounds.add(min(r, max_iter))
-    probe_rounds.add(max(max_iter - 1, 1))
-    probe_rounds.add(max_iter)
+        # Convergence-probe cadence: the label-sum probe is one
+        # scheduled job + a full pass over the node frame + a driver
+        # barrier PER ROUND. Because per-node min labels only ever
+        # DECREASE, equal sums at ANY two probe rounds t1 < t2 prove
+        # every round in between was already the fixed point (the sums
+        # are monotone non-increasing, so equal endpoints pin the whole
+        # chain) — probes need not be consecutive rounds. Schedule: every round for the
+        # first PROBE_WARMUP rounds (typical near-dup graphs have tiny
+        # diameter, so convergence is usually caught here with ZERO
+        # wasted propagation rounds), then every PROBE_STRIDE rounds
+        # (long-chain graphs stop paying a barrier per round; worst case
+        # PROBE_STRIDE-1 extra propagation rounds past the fixed point,
+        # each an idempotent no-change join). Probes at max_iter-1 and
+        # max_iter are always included, which makes the raise contract
+        # EXACTLY the eager schedule's: converged iff the fixed point is
+        # reached by round max_iter-1. (PROBE_STRIDE=1 reproduces the
+        # probe-every-round schedule bit for bit.)
+        probe_rounds = set(range(1, min(PROBE_WARMUP, max_iter) + 1))
+        r = PROBE_WARMUP
+        while r < max_iter:
+            r += PROBE_STRIDE
+            probe_rounds.add(min(r, max_iter))
+        probe_rounds.add(max(max_iter - 1, 1))
+        probe_rounds.add(max_iter)
 
-    scope = CheckpointScope(pairs.sparkSession)
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("label"))
-        .select(F.col("src").alias("node"), "label")
-        .localCheckpoint(eager=False)  # lazy: materialized by the sum job
-    )
-    prev_sum = _label_sum(labels)
-    converged = False
-    for t in range(1, max_iter + 1):
-        labels = (
-            sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
+        labels = scope.checkpoint(  # lazy: materialized by the sum job
+            sym.groupBy("src")
+            .agg(F.min("dst").alias("label"))
             .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=False)
         )
-        if t not in probe_rounds:
-            # unprobed round: lineage is still truncated (LogicalRDD at
-            # call time) and its stages still run exactly once — blocks
-            # are saved on first compute inside the next probe's job
-            continue
-        new_sum = _label_sum(labels)
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    sym.unpersist()
-    edges.unpersist()
-    if not converged:
-        scope.free()
+        prev_sum = _label_sum(labels)
+        for t in range(1, max_iter + 1):
+            labels = scope.checkpoint(
+                sym.join(labels.withColumnRenamed("node", "dst"), "dst")
+                .groupBy("src")
+                .agg(F.min("label").alias("label"))
+                .select(F.col("src").alias("node"), "label")
+            )
+            if t not in probe_rounds:
+                # unprobed round: lineage is still truncated (LogicalRDD
+                # at call time) and its stages still run exactly once —
+                # blocks are saved on first compute inside the next
+                # probe's job
+                continue
+            new_sum = _label_sum(labels)
+            if new_sum == prev_sum:
+                return scope.keep(labels.select("node", F.col("label").alias("cluster_id")))
+            prev_sum = new_sum
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    mark = scope.ids()
-    result = labels.select(
-        F.col("node"), F.col("label").alias("cluster_id")
-    ).localCheckpoint()  # eager: detach from the intermediates, then free them
-    scope.free(mark)
-    return result
 
 
 def dedup_clusters(
@@ -317,7 +295,6 @@ def connected_components_star(
     round's checkpoint. Output: ``(node, cluster_id)``, identical
     contract to :func:`connected_components`.
     """
-    from pyspark import StorageLevel
 
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -350,39 +327,29 @@ def connected_components_star(
         ).collect()[0]
         return (row.n, row.h)
 
-    scope = CheckpointScope(pairs.sparkSession)
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev = _sig(edges)
-    converged = False
-    for _ in range(max_iter):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        cur = _sig(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        scope.free()
-        raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
-    mark = scope.ids()
-    # fixed point = star edges (node -> component min); the min itself
-    # labels itself
-    labels = (
-        edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-        .unionByName(
-            edges.select(F.col("v").alias("node"), F.col("v").alias("cluster_id"))
+    with CheckpointScope(pairs.sparkSession) as scope:
+        edges = scope.checkpoint(
+            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        .groupBy("node")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-        .localCheckpoint()
-    )
-    scope.free(mark)
-    return labels
+        prev = _sig(edges)
+        for _ in range(max_iter):
+            edges = scope.checkpoint(_small_star(_large_star(edges)))
+            cur = _sig(edges)
+            if cur == prev:
+                # fixed point = star edges (node -> component min); the
+                # min itself labels itself
+                return scope.keep(
+                    edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
+                    .unionByName(
+                        edges.select(F.col("v").alias("node"), F.col("v").alias("cluster_id"))
+                    )
+                    .groupBy("node")
+                    .agg(F.min("cluster_id").alias("cluster_id"))
+                )
+            prev = cur
+        raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
 
 
 def label_propagation(
@@ -403,68 +370,55 @@ def label_propagation(
     deterministic — callers wanting a stable fixed point should treat
     the round count as part of the contract.
 
-    Size-adaptive physical strategy, same rationale as
-    :func:`connected_components`: the verified pair list is orders of
-    magnitude smaller than the corpus, so at or under
-    ``driver_threshold`` edges the rounds run as a driver dict loop
-    (zero extra jobs); above it, each round is one equi-join + keyed
-    count + per-node window with ``localCheckpoint`` lineage
-    truncation — the 100 TB contract.
+    Size-adaptive through :func:`.graph._switch`, same rationale as
+    :func:`connected_components`: at or under ``driver_threshold``
+    edges the rounds run as a driver dict loop; above it, each round is
+    one equi-join + keyed count + per-node window with
+    ``localCheckpoint`` lineage truncation — the 100 TB contract.
     """
     from collections import Counter
 
-    from pyspark import StorageLevel
-
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = edges.count()  # eager cache fill + size probe
-    if n_edges <= driver_threshold:
-        rows = edges.collect()
-        edges.unpersist()
-        nbrs: dict[int, list[int]] = {}
-        for r in rows:
-            nbrs.setdefault(r.src, []).append(r.dst)
-            nbrs.setdefault(r.dst, []).append(r.src)
-        labels = {n: n for n in nbrs}
+    spark = pairs.sparkSession
+    with CheckpointScope(spark) as scope:
+        edges, rows = _switch(
+            scope,
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+            driver_threshold,
+        )
+        if rows is not None:
+            nbrs: dict[int, list[int]] = {}
+            for r in rows:
+                nbrs.setdefault(r.src, []).append(r.dst)
+                nbrs.setdefault(r.dst, []).append(r.src)
+            labels = {n: n for n in nbrs}
+            for _ in range(rounds):
+                labels = {
+                    n: min(
+                        (c for c in Counter(labels[x] for x in nb).items()),
+                        key=lambda kv: (-kv[1], kv[0]),
+                    )[0]
+                    for n, nb in nbrs.items()
+                }
+            return _result(spark, _nodes(edges), "label {id}", labels.items())
+        # lazy checkpoints (r8): the round count is FIXED (no
+        # convergence probe needs a per-round materialization), so
+        # truncate each round's logical plan without a blocking job —
+        # the window's exchange above each round serves the next
+        # round's join via shuffle reuse inside one scheduled action.
+        # See graph.bfs_hops.
+        both = scope.checkpoint(
+            edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        )
+        labels_df = both.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        )
+        w = Window.partitionBy("src").orderBy(F.col("c").desc(), F.col("label").asc())
         for _ in range(rounds):
-            labels = {
-                n: min(
-                    (c for c in Counter(labels[x] for x in nb).items()),
-                    key=lambda kv: (-kv[1], kv[0]),
-                )[0]
-                for n, nb in nbrs.items()
-            }
-        return pairs.sparkSession.createDataFrame(
-            list(labels.items()), schema="node long, label long"
-        )
-    # lazy checkpoints (r8): the round count is FIXED (no convergence
-    # probe needs a per-round materialization), so truncate each
-    # round's logical plan without a blocking job — the window's
-    # exchange above each round serves the next round's join via
-    # shuffle reuse inside one scheduled action. See graph.bfs_hops.
-    # The scope frees them once the result is checkpointed eagerly.
-    scope = CheckpointScope(pairs.sparkSession)
-    both = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    labels_df = both.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    w = Window.partitionBy("src").orderBy(F.col("c").desc(), F.col("label").asc())
-    for _ in range(rounds):
-        nb = both.join(labels_df, both.dst == labels_df.node).select(
-            "src", "label"
-        )
-        counts = nb.groupBy("src", "label").agg(F.count(F.lit(1)).alias("c"))
-        labels_df = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=False)
-        )
-    mark = scope.ids()
-    labels_df = labels_df.localCheckpoint()
-    scope.free(mark)
-    edges.unpersist()
-    return labels_df
+            nb = both.join(labels_df, both.dst == labels_df.node).select("src", "label")
+            counts = nb.groupBy("src", "label").agg(F.count(F.lit(1)).alias("c"))
+            labels_df = scope.checkpoint(
+                counts.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select(F.col("src").alias("node"), "label")
+            )
+        return scope.keep(labels_df)

@@ -6,6 +6,16 @@ seed: both run one rank loop, :func:`_rank_replay` on the driver or
 and dangling share. :func:`hits_scores` reads the same arc list
 (:func:`_arcs`).
 
+One skeleton serves every iterative operator here and in
+:mod:`.cluster`: the call runs inside one ``session.CheckpointScope``;
+:func:`_switch` pins the edge list, fills it with one eager count and,
+at or under ``driver_threshold``, collects it for a driver path whose
+result :func:`_result` types like the input ids; the distributed path
+checkpoints its rounds through the scope and returns
+``scope.keep(result)``. The scope's exit is the one place that frees
+pins and checkpoints — on return (all but the kept result) and on a
+raise (everything).
+
 No counterpart in the reference (two single-table pandas/MySQL check
 scripts, `/root/reference/data_consistency_checks.py:43-77`,
 `pre_and_post_etl_checks.py:45-110` — no graph structure anywhere);
@@ -32,7 +42,7 @@ Scale design (the 100 TB contract is a web-scale link graph):
   materialized by the rank-sum probe job) exactly as in
   :mod:`..operators.cluster` — a depth-k iterated join plan
   otherwise blows up Catalyst analysis super-linearly. Checkpoint
-  blocks are freed explicitly after the final frame detaches.
+  blocks are freed by the scope's exit once the result is kept.
 - Iteration count is FIXED (default 10), not convergence-tested:
   deterministic output for the differential oracle, bounded job
   count at any scale. The rank-sum probe doubles as a sanity
@@ -43,11 +53,14 @@ Scale design (the 100 TB contract is a web-scale link graph):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.session import CheckpointScope
+
+#: The rank/HITS mass probe runs every PROBE_EVERY rounds and after the
+#: final round (see :func:`_rank_loop`).
+PROBE_EVERY = 5
 
 
 def _arcs(edges: DataFrame, src: str, dst: str, weight_col: str | None) -> DataFrame:
@@ -76,22 +89,38 @@ def _nodes(arcs: DataFrame) -> DataFrame:
 def _result(spark: SparkSession, nodes: DataFrame, cols: str, rows=()) -> DataFrame:
     """A driver-built (or empty) result whose ``node`` has the type the
     distributed loop would give it: that of ``nodes`` (analysis only,
-    no job)."""
+    no job). ``{id}`` in ``cols`` stands for that type too."""
     t = nodes.schema["node"].dataType.simpleString()
-    return spark.createDataFrame(list(rows), schema=f"node {t}, {cols}")
+    return spark.createDataFrame(list(rows), schema=f"node {t}, " + cols.format(id=t))
+
+
+def _switch(
+    scope: CheckpointScope, edges: DataFrame, driver_threshold: int
+) -> tuple[DataFrame, list | None]:
+    """The size switch of every iterative operator: pin ``edges``, fill
+    the pin with ONE eager count (the rounds must reuse it, not rebuild
+    the upstream lineage), and at or under ``driver_threshold`` rows
+    collect them for the driver path. The edge list is the output of a
+    dedup funnel or an aggregation, orders of magnitude smaller than
+    its input; the driver path skips the distributed loop's per-round
+    scheduler+shuffle floor (~0.2-0.6 s × rounds even for a 10-node
+    graph) with identical output. Returns ``(pinned edges, rows)``,
+    ``rows`` None above the threshold."""
+    edges = scope.pin(edges)
+    n = edges.count()
+    return edges, (edges.collect() if n <= max(driver_threshold, 0) else None)
 
 
 def _normalized(edges: DataFrame, src: str, dst: str, weight_col: str | None) -> DataFrame:
     """The arc list with each arc's transition probability ``frac``
     (normalized once, so the per-round join needs no third table),
-    placed by ``src`` and persisted; the caller fills it eagerly."""
+    placed by ``src``."""
     arcs = _arcs(edges, src, dst, weight_col)
     outw = arcs.groupBy("src").agg(F.sum("w").alias("tw"))
     return (
         arcs.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("tw")).alias("frac"))
         .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -116,6 +145,7 @@ def _rank_replay(norm_rows, nodes, r, teleport, dang_share, iters, damping, prec
 
 
 def _rank_loop(
+    scope: CheckpointScope,
     norm: DataFrame,
     nodes: DataFrame,
     r0: Column,
@@ -124,18 +154,15 @@ def _rank_loop(
     iters: int,
     damping: float,
     prec: int,
-    probe_every: int,
 ) -> DataFrame:
     """The distributed rank recurrence
-    ``r ← teleport + d·(Pᵀr + dang_share)`` over the persisted
-    normalized arcs ``norm`` and the persisted ``nodes`` frame, from the
-    start ranks ``r0``. ``r0``, ``teleport`` and ``dang_share`` are
-    columns over ``nodes``; ``dang_share`` also reads the round's
-    dangling mass ``dang``. Frees ``norm``, ``nodes`` and every round's
-    checkpoint, and returns the eagerly checkpointed ``(node, rank)``."""
-    srcs = norm.select("src").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    scope = CheckpointScope(norm.sparkSession)
-    ranks = nodes.select("node", r0.alias("r")).localCheckpoint(eager=False)
+    ``r ← teleport + d·(Pᵀr + dang_share)`` over the pinned normalized
+    arcs ``norm`` and the pinned ``nodes`` frame, from the start ranks
+    ``r0``. ``r0``, ``teleport`` and ``dang_share`` are columns over
+    ``nodes``; ``dang_share`` also reads the round's dangling mass
+    ``dang``. Returns the kept ``(node, rank)``."""
+    srcs = scope.pin(norm.select("src").distinct())
+    ranks = scope.checkpoint(nodes.select("node", r0.alias("r")))
     for it in range(iters):
         # global dangling mass: 1-row aggregate, broadcast back onto
         # every node row (never a driver collect in the loop)
@@ -147,7 +174,7 @@ def _rank_loop(
             .groupBy("dst")
             .agg(F.sum(F.col("r") * F.col("frac")).alias("contrib"))
         )
-        ranks = (
+        ranks = scope.checkpoint(
             nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -158,9 +185,8 @@ def _rank_loop(
                     * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dang_share)
                 ).alias("r"),
             )
-            .localCheckpoint(eager=False)
         )
-        # Batched invariant probe (every probe_every rounds + the final
+        # Batched invariant probe (every PROBE_EVERY rounds + the final
         # round, instead of every round): the probe is a pure tripwire
         # — the recurrence conserves mass analytically, the loop is a
         # FIXED round count, and the rounds in between still truncate
@@ -172,20 +198,14 @@ def _rank_loop(
         # the node-sized rank frame + a driver collect barrier PER
         # ROUND — at web-graph scale, a cluster-wide sync for a scalar
         # the probed round re-checks anyway. Drift introduced in an
-        # unprobed round is caught at the next probe ≤ probe_every
+        # unprobed round is caught at the next probe ≤ PROBE_EVERY
         # rounds later; healthy runs return bit-identical output.
-        if (it + 1) % probe_every == 0 or it == iters - 1:
+        if (it + 1) % PROBE_EVERY == 0 or it == iters - 1:
             total = ranks.agg(F.sum("r")).collect()[0][0]
             # ValueError, not assert: must hold under -O too
             if abs(total - 1.0) >= 1e-6:
                 raise ValueError(f"rank mass drifted: {total}")
-    mark = scope.ids()
-    out = ranks.select("node", F.round(F.col("r"), prec).alias("rank")).localCheckpoint()
-    scope.free(mark)
-    norm.unpersist()
-    nodes.unpersist()
-    srcs.unpersist()
-    return out
+    return scope.keep(ranks.select("node", F.round(F.col("r"), prec).alias("rank")))
 
 
 def pagerank(
@@ -197,7 +217,6 @@ def pagerank(
     damping: float = 0.85,
     prec: int = 6,
     driver_threshold: int = 1_000_000,
-    probe_every: int = 5,
 ) -> DataFrame:
     """Weighted PageRank over an edge list; returns ``(node, rank)``
     with ``rank`` rounded to ``prec`` decimals (both engines of the
@@ -207,36 +226,29 @@ def pagerank(
     absent ``weight_col`` means every edge counts 1. Each round is
     ``r ← (1-d)/n + d·(Pᵀr + dang/n)``.
 
-    Size-adaptive like :func:`..operators.cluster.connected_components`:
-    the aggregated arc list's size is already known from the eager
-    cache fill, and at or under ``driver_threshold`` arcs the fixed-
-    iteration recurrence runs as a driver-side loop — identical
-    output, none of the per-round scheduler+shuffle floor (~0.6 s ×
-    rounds even for a 10-node transition graph). Above the threshold
-    the distributed loop is the 100 TB web-graph contract.
+    Size-adaptive through :func:`_switch` over the aggregated arc
+    list: at or under ``driver_threshold`` arcs the fixed-iteration
+    recurrence runs as a driver-side loop; above it the distributed
+    loop is the 100 TB web-graph contract.
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     spark = edges.sparkSession
-    norm = _normalized(edges, src, dst, weight_col)
-    n_arcs = norm.count()  # eager cache fill: iterations must reuse, not rebuild
-    nodes = _nodes(norm)
-    if n_arcs == 0 or n_arcs <= driver_threshold:
-        rows = norm.collect()
-        norm.unpersist()
-        ids = sorted({a.src for a in rows} | {a.dst for a in rows})
-        n = len(ids)
-        out = _rank_replay(
-            rows, ids, {v: 1.0 / n for v in ids}, lambda v: (1.0 - damping) / n,
-            lambda dang, v: dang / n, iters, damping, prec,
+    with CheckpointScope(spark) as scope:
+        norm, rows = _switch(scope, _normalized(edges, src, dst, weight_col), driver_threshold)
+        nodes = _nodes(norm)
+        if rows is not None:
+            ids = sorted({a.src for a in rows} | {a.dst for a in rows})
+            n = len(ids)
+            out = _rank_replay(
+                rows, ids, {v: 1.0 / n for v in ids}, lambda v: (1.0 - damping) / n,
+                lambda dang, v: dang / n, iters, damping, prec,
+            )
+            return _result(spark, nodes, "rank double", out)
+        nodes = scope.pin(nodes)
+        n = nodes.count()  # bounded scalar: graph order, not data volume
+        return _rank_loop(
+            scope, norm, nodes, F.lit(1.0 / n), F.lit((1.0 - damping) / n),
+            F.col("dang") / F.lit(float(n)), iters, damping, prec,
         )
-        return _result(spark, nodes, "rank double", out)
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    n = nodes.count()  # bounded scalar: graph order, not data volume
-    return _rank_loop(
-        norm, nodes, F.lit(1.0 / n), F.lit((1.0 - damping) / n),
-        F.col("dang") / F.lit(float(n)), iters, damping, prec, probe_every,
-    )
 
 
 def personalized_pagerank(
@@ -250,7 +262,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     prec: int = 6,
     driver_threshold: int = 1_000_000,
-    probe_every: int = 5,
 ) -> DataFrame:
     """Personalized (seeded) PageRank: the teleport vector is uniform
     over ``seeds`` instead of over all nodes, so rank mass measures
@@ -266,51 +277,44 @@ def personalized_pagerank(
     differ. Seeds absent from the edge list still hold teleport mass
     (they are unioned into the node set).
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     spark = edges.sparkSession
-    norm = _normalized(edges, src, dst, weight_col)
     seed_frame = seeds.select(F.col(seed_col).alias("node")).distinct()
-    n_arcs = norm.count()  # eager cache fill
-    all_nodes = _nodes(norm).unionByName(seed_frame).distinct()
-    if n_arcs <= driver_threshold:
-        # seed sets are release gates / query inputs — bounded by
-        # contract, so the collect here is a driver-path prerequisite,
-        # not a data-sized pull (the distributed loop below never
-        # collects seeds)
-        seed_set = {r.node for r in seed_frame.collect()}
-        rows = norm.collect()
-        norm.unpersist()
-        if not seed_set:
+    with CheckpointScope(spark) as scope:
+        norm, rows = _switch(scope, _normalized(edges, src, dst, weight_col), driver_threshold)
+        all_nodes = _nodes(norm).unionByName(seed_frame).distinct()
+        if rows is not None:
+            # seed sets are release gates / query inputs — bounded by
+            # contract, so the collect here is a driver-path
+            # prerequisite, not a data-sized pull (the distributed loop
+            # below never collects seeds)
+            seed_set = {r.node for r in seed_frame.collect()}
+            if not seed_set:
+                return _result(spark, all_nodes, "rank double")
+            ids = sorted({a.src for a in rows} | {a.dst for a in rows} | seed_set)
+            tele = {v: (1.0 / len(seed_set) if v in seed_set else 0.0) for v in ids}
+            out = _rank_replay(
+                rows, ids, tele, lambda v: (1.0 - damping) * tele[v],
+                lambda dang, v: dang * tele[v], iters, damping, prec,
+            )
+            return _result(spark, all_nodes, "rank double", out)
+        n_seeds = seed_frame.count()
+        if n_seeds == 0:
             return _result(spark, all_nodes, "rank double")
-        ids = sorted({a.src for a in rows} | {a.dst for a in rows} | seed_set)
-        tele = {v: (1.0 / len(seed_set) if v in seed_set else 0.0) for v in ids}
-        out = _rank_replay(
-            rows, ids, tele, lambda v: (1.0 - damping) * tele[v],
-            lambda dang, v: dang * tele[v], iters, damping, prec,
+        # teleport vector: one row per node, 1/|S| on seeds, 0 elsewhere
+        nodes = scope.pin(
+            all_nodes.join(seed_frame.withColumn("is_seed", F.lit(True)), "node", "left")
+            .select(
+                "node",
+                F.when(F.col("is_seed"), F.lit(1.0 / n_seeds))
+                .otherwise(F.lit(0.0))
+                .alias("tele"),
+            )
         )
-        return _result(spark, all_nodes, "rank double", out)
-
-    n_seeds = seed_frame.count()
-    if n_seeds == 0:
-        norm.unpersist()
-        return _result(spark, all_nodes, "rank double")
-    # teleport vector: one row per node, 1/|S| on seeds, 0 elsewhere
-    nodes = (
-        all_nodes.join(seed_frame.withColumn("is_seed", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            F.when(F.col("is_seed"), F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
+        nodes.count()
+        return _rank_loop(
+            scope, norm, nodes, F.col("tele"), F.lit(1.0 - damping) * F.col("tele"),
+            F.col("dang") * F.col("tele"), iters, damping, prec,
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes.count()
-    return _rank_loop(
-        norm, nodes, F.col("tele"), F.lit(1.0 - damping) * F.col("tele"),
-        F.col("dang") * F.col("tele"), iters, damping, prec, probe_every,
-    )
 
 
 def _undirected(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -578,32 +582,32 @@ def bfs_hops(
     here sits directly above a shuffle (distinct / the verified pair
     join), so a second stage reading the same RDD re-reads shuffle
     files, never recomputes the upstream plan. Measured at sf0.1 over
-    MinHash pairs: 4.3 s → 3.1 s median, identical rows.
+    MinHash pairs: 4.3 s → 3.1 s median, identical rows. The result is
+    kept (checkpointed eagerly) so the round checkpoints are freed
+    before the call returns.
     """
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .localCheckpoint(eager=False)
-    )
-    dist = (
-        seeds.select(F.col(node_col).alias("node"))
-        .distinct()
-        .select("node", F.lit(0).alias("hops"))
-        .localCheckpoint(eager=False)
-    )
-    frontier = dist
-    for h in range(1, int(max_hops) + 1):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["s"])
-            .select(F.col("t").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(h).alias("hops"))
-            .localCheckpoint(eager=False)
+    with CheckpointScope(edges.sparkSession) as scope:
+        sym = scope.checkpoint(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+            .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
         )
-        dist = dist.unionByName(nxt)
-        frontier = nxt
-    return dist.select("node", F.col("hops").cast("long").alias("hops"))
+        dist = scope.checkpoint(
+            seeds.select(F.col(node_col).alias("node"))
+            .distinct()
+            .select("node", F.lit(0).alias("hops"))
+        )
+        frontier = dist
+        for h in range(1, int(max_hops) + 1):
+            nxt = scope.checkpoint(
+                frontier.join(sym, frontier["node"] == sym["s"])
+                .select(F.col("t").alias("node"))
+                .distinct()
+                .join(dist, "node", "left_anti")
+                .select("node", F.lit(h).alias("hops"))
+            )
+            dist = dist.unionByName(nxt)
+            frontier = nxt
+        return scope.keep(dist.select("node", F.col("hops").cast("long").alias("hops")))
 
 
 def kcore_peel(
@@ -647,40 +651,36 @@ def kcore_peel(
     # checkpointed frame sits above a shuffle (dropDuplicates /
     # distinct / the semi-join exchanges), so stage-level shuffle reuse
     # serves repeat readers. Same move as bfs_hops; see its docstring.
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(F.col("s") != F.col("t"))
-        .dropDuplicates(["s", "t"])
-        .localCheckpoint(eager=False)
-    )
-    all_nodes = (
-        sym.select(F.col("s").alias("node")).distinct().localCheckpoint(eager=False)
-    )
-    live = sym
-    for _ in range(int(rounds)):
-        keep = (
-            live.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("s").alias("kn"))
+    with CheckpointScope(edges.sparkSession) as scope:
+        sym = scope.checkpoint(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+            .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
+            .where(F.col("s") != F.col("t"))
+            .dropDuplicates(["s", "t"])
         )
-        live = (
-            live.join(keep.withColumnRenamed("kn", "s"), "s", "left_semi")
-            .join(keep.select(F.col("kn").alias("t")), "t", "left_semi")
-            .localCheckpoint(eager=False)
+        all_nodes = scope.checkpoint(sym.select(F.col("s").alias("node")).distinct())
+        live = sym
+        for _ in range(int(rounds)):
+            keep = (
+                live.groupBy("s")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .where(F.col("deg") >= k)
+                .select(F.col("s").alias("kn"))
+            )
+            live = scope.checkpoint(
+                live.join(keep.withColumnRenamed("kn", "s"), "s", "left_semi")
+                .join(keep.select(F.col("kn").alias("t")), "t", "left_semi")
+            )
+        final_deg = live.groupBy("s").agg(F.count(F.lit(1)).alias("fdeg"))
+        return scope.keep(
+            all_nodes.join(
+                final_deg.select(F.col("s").alias("node"), F.col("fdeg")), "node", "left"
+            ).select(
+                "node",
+                F.coalesce("fdeg", F.lit(0)).cast("long").alias("core_degree"),
+                (F.coalesce("fdeg", F.lit(0)) >= k).alias("in_kcore"),
+            )
         )
-    final_deg = live.groupBy("s").agg(F.count(F.lit(1)).alias("fdeg"))
-    return (
-        all_nodes.join(
-            final_deg.select(F.col("s").alias("node"), F.col("fdeg")), "node", "left"
-        )
-        .select(
-            "node",
-            F.coalesce("fdeg", F.lit(0)).cast("long").alias("core_degree"),
-            (F.coalesce("fdeg", F.lit(0)) >= k).alias("in_kcore"),
-        )
-    )
 
 
 def _hits_replay(arc_rows, iters: int, prec: int) -> list[tuple]:
@@ -716,7 +716,6 @@ def hits_scores(
     iters: int = 10,
     prec: int = 6,
     driver_threshold: int = 1_000_000,
-    probe_every: int = 5,
 ) -> DataFrame:
     """Kleinberg HITS over a weighted arc list: mutually-recursive hub
     and authority scores (``auth ← Σ_in hub·w``, then ``hub ← Σ_out
@@ -736,86 +735,67 @@ def hits_scores(
     collapsed by summing weights; fixed ``iters`` keeps both the job
     count and the oracle unroll bounded.
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    arcs = (
-        _arcs(edges, src, dst, weight_col)
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_arcs = arcs.count()
     spark = edges.sparkSession
-    nodes = _nodes(arcs)
-    if n_arcs == 0 or n_arcs <= driver_threshold:
-        rows = arcs.collect()
-        arcs.unpersist()
-        return _result(
-            spark, nodes, "hub double, authority double", _hits_replay(rows, iters, prec)
+    with CheckpointScope(spark) as scope:
+        arcs, rows = _switch(
+            scope, _arcs(edges, src, dst, weight_col).repartition("src"), driver_threshold
         )
+        nodes = _nodes(arcs)
+        if rows is not None:
+            return _result(
+                spark, nodes, "hub double, authority double", _hits_replay(rows, iters, prec)
+            )
+        nodes = scope.pin(nodes)
+        n_nodes = nodes.count()
+        hub = auth = scope.checkpoint(nodes.select("node", F.lit(1.0 / n_nodes).alias("s")))
 
-    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    n_nodes = nodes.count()
+        def _half_step(scores: DataFrame, key_in: str, key_out: str) -> DataFrame:
+            """One HITS half-step: push `scores` across arcs from key_in
+            to key_out, L1-normalize, return the new (node, s) frame."""
+            agg = (
+                arcs.join(scores.withColumnRenamed("node", key_in), key_in)
+                .groupBy(F.col(key_out).alias("node"))
+                .agg(F.sum(F.col("s") * F.col("w")).alias("m"))
+            )
+            total = agg.agg(F.coalesce(F.sum("m"), F.lit(0.0)).alias("t"))
+            return scope.checkpoint(
+                nodes.join(agg, "node", "left")
+                .crossJoin(F.broadcast(total))
+                .select(
+                    "node",
+                    F.when(
+                        F.col("t") > 0,
+                        F.coalesce(F.col("m"), F.lit(0.0)) / F.col("t"),
+                    )
+                    .otherwise(F.lit(0.0))
+                    .alias("s"),
+                )
+            )
 
-    # per-round localCheckpoints otherwise outlive the call
-    scope = CheckpointScope(spark)
-    hub = nodes.select("node", F.lit(1.0 / n_nodes).alias("s")).localCheckpoint(
-        eager=False
-    )
-    auth = hub
-
-    def _half_step(scores: DataFrame, key_in: str, key_out: str) -> DataFrame:
-        """One HITS half-step: push `scores` across arcs from key_in to
-        key_out, L1-normalize, return the new (node, s) frame."""
-        agg = (
-            arcs.join(scores.withColumnRenamed("node", key_in), key_in)
-            .groupBy(F.col(key_out).alias("node"))
-            .agg(F.sum(F.col("s") * F.col("w")).alias("m"))
-        )
-        total = agg.agg(F.coalesce(F.sum("m"), F.lit(0.0)).alias("t"))
-        return (
-            nodes.join(agg, "node", "left")
-            .crossJoin(F.broadcast(total))
+        for it in range(iters):
+            auth = _half_step(hub, "src", "dst")
+            hub = _half_step(auth, "dst", "src")
+            # Batched invariant probe (every PROBE_EVERY rounds + final):
+            # the vector stays L1-normalized — OR collapses to exactly
+            # zero (all-zero weights), which the driver fast path also
+            # yields (``sa > 0 else 0.0``). The L1 normalization itself
+            # is a broadcast scalar INSIDE each half-step's plan, not
+            # this probe, so skipping the probe changes no arithmetic;
+            # it only drops a per-round job + full score-frame pass +
+            # driver barrier (same argument as pagerank). ValueError,
+            # not assert, so the check survives ``python -O`` and
+            # degenerate graphs behave identically on both sides of the
+            # size split.
+            if (it + 1) % PROBE_EVERY == 0 or it == iters - 1:
+                s = hub.agg(F.sum("s")).collect()[0][0]
+                if s != 0.0 and abs(s - 1.0) >= 1e-6:
+                    raise ValueError(f"hub mass drifted: {s}")
+        return scope.keep(
+            hub.withColumnRenamed("s", "h")
+            .join(auth.withColumnRenamed("s", "a"), "node")
             .select(
                 "node",
-                F.when(
-                    F.col("t") > 0,
-                    F.coalesce(F.col("m"), F.lit(0.0)) / F.col("t"),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("s"),
+                F.round(F.col("h"), prec).alias("hub"),
+                F.round(F.col("a"), prec).alias("authority"),
             )
-            .localCheckpoint(eager=False)
         )
-
-    for it in range(iters):
-        auth = _half_step(hub, "src", "dst")
-        hub = _half_step(auth, "dst", "src")
-        # Batched invariant probe (every probe_every rounds + final):
-        # the vector stays L1-normalized — OR collapses to exactly zero
-        # (all-zero weights), which the driver fast path also yields
-        # (``sa > 0 else 0.0``). The L1 normalization itself is a
-        # broadcast scalar INSIDE each half-step's plan, not this
-        # probe, so skipping the probe changes no arithmetic; it only
-        # drops a per-round job + full score-frame pass + driver
-        # barrier (same argument as pagerank). ValueError, not assert,
-        # so the check survives ``python -O`` and degenerate graphs
-        # behave identically on both sides of the size split.
-        if (it + 1) % probe_every == 0 or it == iters - 1:
-            s = hub.agg(F.sum("s")).collect()[0][0]
-            if s != 0.0 and abs(s - 1.0) >= 1e-6:
-                raise ValueError(f"hub mass drifted: {s}")
-    mark = scope.ids()
-    out = (
-        hub.withColumnRenamed("s", "h")
-        .join(auth.withColumnRenamed("s", "a"), "node")
-        .select(
-            "node",
-            F.round(F.col("h"), prec).alias("hub"),
-            F.round(F.col("a"), prec).alias("authority"),
-        )
-        .localCheckpoint()
-    )
-    scope.free(mark)
-    arcs.unpersist()
-    nodes.unpersist()
-    return out

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 #: Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
@@ -151,31 +152,58 @@ def register_views(
 
 
 class CheckpointScope:
-    """Lifetime of the checkpoint blocks an iterative loop creates.
+    """Lifetime of the caches and checkpoint blocks one operator call
+    makes::
+
+        with CheckpointScope(spark) as scope:
+            edges = scope.pin(frame)          # persisted
+            x = scope.checkpoint(frame)       # lazy localCheckpoint
+            return scope.keep(result)         # eager; outlives the block
 
     ``localCheckpoint`` blocks are NOT freed by ``unpersist()`` /
     ``clearCache()``; left alone, per-round checkpoints accumulate for
     the session's lifetime and degrade the whole executor (observed:
-    unrelated queries 2× slower after a few calls). Construct the scope
-    before the loop (it snapshots the persistent RDDs), take
-    ``mark = scope.ids()`` just before the final eager checkpoint that
-    detaches the result, then ``scope.free(mark)`` frees every
-    intermediate while keeping the RDD backing the result.
-    ``scope.free()`` with no mark frees everything created since the
-    snapshot (the raise path).
+    unrelated queries 2× slower after a few calls). The exit unpersists
+    every pinned frame through its DataFrame (freeing only its RDD
+    would leave the CacheManager entry behind) and frees every
+    checkpoint except the kept result's; leaving by an exception frees
+    that one too. Only what was registered here is freed: a caller's
+    lazily cached input that the call happens to fill stays cached.
     """
 
     def __init__(self, spark: SparkSession) -> None:
         self._jsc = spark.sparkContext._jsc
-        self._pre = self.ids()
+        self._pins: list[DataFrame] = []
+        self._rdds: list[int] = []
+        self._kept: int | None = None
 
-    def ids(self) -> set[int]:
-        return {int(i) for i in self._jsc.getPersistentRDDs().keySet().toArray()}
+    def __enter__(self) -> CheckpointScope:
+        return self
 
-    def free(self, mark: set[int] | None = None) -> None:
-        drop = (self.ids() if mark is None else mark) - self._pre
-        it = self._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in drop:
-                e.getValue().unpersist(False)
+    def __exit__(self, exc_type, exc, tb) -> None:
+        for df in self._pins:
+            df.unpersist()
+        live = self._jsc.getPersistentRDDs()
+        for i in self._rdds:
+            if (exc_type is not None or i != self._kept) and live.containsKey(i):
+                live.get(i).unpersist(False)
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted (memory, spilling to disk) until the exit."""
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._pins.append(df)
+        return df
+
+    def checkpoint(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """``df.localCheckpoint`` (lazy by default), freed at the exit."""
+        out = df.localCheckpoint(eager=eager)
+        # the checkpointed RDD backs the LogicalRDD the new frame wraps
+        self._rdds.append(out._jdf.queryExecution().logical().rdd().id())
+        return out
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """``df`` checkpointed eagerly, detached from every pin and
+        checkpoint above it; its blocks outlive the scope."""
+        out = self.checkpoint(df, eager=True)
+        self._kept = self._rdds[-1]
+        return out

@@ -7,10 +7,10 @@ At the shipped SFs every graph/cluster loop takes the driver fast path
 distributed per-round probe cadence cannot be measured by the bench.
 This harness forces the distributed loop with ``driver_threshold=0``
 on the real sf0.1 inputs (plus a deep-chain synthetic graph for the
-convergence loop), runs the per-round cadence (probe_every /
-probe_stride = 1) against the batched cadence interleaved in ONE
-session, and reports wall time, Spark job counts (per job group), and
-an output-equality check.
+convergence loop), runs the per-round cadence (``graph.PROBE_EVERY``
+and ``cluster.PROBE_STRIDE`` set to 1) against the shipped batched
+cadence interleaved in ONE session, and reports wall time, Spark job
+counts (per job group), and an output-equality check.
 
 Usage: python scripts/forced_distributed_ab.py [reps]
 """
@@ -25,14 +25,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from pyspark.sql import functions as F
 
-from data_quality_checks_in_relational_database_spark.operators.cluster import (
-    connected_components,
-)
-from data_quality_checks_in_relational_database_spark.operators.graph import (
-    hits_scores,
-    pagerank,
-    personalized_pagerank,
-)
+from data_quality_checks_in_relational_database_spark.operators import cluster, graph
 from data_quality_checks_in_relational_database_spark.session import (
     get_spark,
     load_tables,
@@ -78,39 +71,37 @@ def main() -> None:
         [(i + 1, i) for i in range(18)], schema="doc_id_a long, doc_id_b long"
     )
 
+    # each arm sets the module cadence constants before its call
+    knobs = ((graph, "PROBE_EVERY"), (cluster, "PROBE_WARMUP"), (cluster, "PROBE_STRIDE"))
+    cadence = {
+        "old": (1, cluster.PROBE_WARMUP, 1),
+        "new": tuple(getattr(mod, name) for mod, name in knobs),
+    }
+
+    def arm(lbl, fn):
+        def run():
+            for (mod, name), value in zip(knobs, cadence[lbl]):
+                setattr(mod, name, value)
+            return fn()
+
+        return run
+
+    calls = {
+        "pagerank": lambda: graph.pagerank(
+            arcs, "src", "dst", weight_col="w", driver_threshold=0
+        ),
+        "ppr": lambda: graph.personalized_pagerank(
+            arcs, seeds, "src", "dst", weight_col="w", driver_threshold=0
+        ),
+        "hits": lambda: graph.hits_scores(
+            arcs, "src", "dst", weight_col="w", driver_threshold=0
+        ),
+        "connected_components_chain": lambda: cluster.connected_components(
+            chain, driver_threshold=0
+        ),
+    }
     cases = {
-        "pagerank": {
-            "old": lambda: pagerank(
-                arcs, "src", "dst", weight_col="w", driver_threshold=0, probe_every=1
-            ),
-            "new": lambda: pagerank(
-                arcs, "src", "dst", weight_col="w", driver_threshold=0, probe_every=5
-            ),
-        },
-        "ppr": {
-            "old": lambda: personalized_pagerank(
-                arcs, seeds, "src", "dst", weight_col="w", driver_threshold=0, probe_every=1
-            ),
-            "new": lambda: personalized_pagerank(
-                arcs, seeds, "src", "dst", weight_col="w", driver_threshold=0, probe_every=5
-            ),
-        },
-        "hits": {
-            "old": lambda: hits_scores(
-                arcs, "src", "dst", weight_col="w", driver_threshold=0, probe_every=1
-            ),
-            "new": lambda: hits_scores(
-                arcs, "src", "dst", weight_col="w", driver_threshold=0, probe_every=5
-            ),
-        },
-        "connected_components_chain": {
-            "old": lambda: connected_components(
-                chain, driver_threshold=0, probe_stride=1
-            ),
-            "new": lambda: connected_components(
-                chain, driver_threshold=0, probe_warmup=2, probe_stride=4
-            ),
-        },
+        name: {lbl: arm(lbl, fn) for lbl in ("old", "new")} for name, fn in calls.items()
     }
 
     for name, variants in cases.items():

@@ -349,6 +349,10 @@ def test_hits_empty_graph(spark):
 
 from pyspark.sql.types import IntegerType  # noqa: E402
 
+from data_quality_checks_in_relational_database_spark.operators.cluster import (  # noqa: E402
+    connected_components,
+    label_propagation,
+)
 from tests.conftest import jobs_in_group  # noqa: E402
 
 _RANKERS = {
@@ -357,17 +361,24 @@ _RANKERS = {
     "hits": lambda e, s, **kw: hits_scores(e, weight_col="w", **kw),
 }
 
+_TYPED = {
+    **_RANKERS,
+    "components": lambda e, s, **kw: connected_components(e, "src", "dst", **kw),
+    "label_propagation": lambda e, s, **kw: label_propagation(e, "src", "dst", **kw),
+}
 
-@pytest.mark.parametrize("op", sorted(_RANKERS))
+
+@pytest.mark.parametrize("op", sorted(_TYPED))
 def test_node_typed_from_input_ids_on_every_path(spark, op):
-    """The driver replay, the distributed loop and the empty result all
-    type ``node`` like the int32 input ids."""
+    """The driver path, the distributed loop and the empty result all
+    type ``node`` (and ``cluster_id``/``label``) like the int32 input
+    ids."""
     schema = "src int, dst int, w double"
     edges = spark.createDataFrame([(1, 2, 1.0), (2, 3, 1.0), (3, 1, 2.0), (1, 4, 1.0)], schema)
     seeds = spark.createDataFrame([(1,)], "node int")
     no_edges = spark.createDataFrame([], schema)
     no_seeds = spark.createDataFrame([], "node int")
-    rank = _RANKERS[op]
+    rank = _TYPED[op]
     driver = rank(edges, seeds)
     dist = rank(edges, seeds, driver_threshold=0)
     empty = rank(no_edges, no_seeds)
@@ -381,7 +392,18 @@ def test_forced_distributed_rank_job_count(spark, op, jobs):
     """Spark jobs of a forced-distributed call plus its collect on a
     tiny graph. PageRank shares PPR's loop but not its seed work (the
     seed count and the teleport-vector fill), so it stays 6 jobs below
-    PPR; a seed join or an extra probe in the shared loop moves both."""
+    PPR; a seed join or an extra probe in the shared loop moves both.
+
+    Where the 78 go (status store, job descriptions per phase; local[4],
+    AQE on): 11 before the loop — the arc-list fill and the node count
+    (2) plus the 9 query-stage jobs AQE submits under them (PPR: 17,
+    its seed distinct, seed count and teleport join add 6); 61 in the
+    10 rounds — 6 query-stage jobs per round, which AQE submits when
+    the lazy ``localCheckpoint`` converts the round's plan (its join and
+    aggregation exchanges and the dangling-mass broadcast), plus 1 in
+    round 1 filling the ``srcs`` pin; 4 for the 2 probes (an aggregate
+    stage and a collect each); 1 for the kept result's eager checkpoint
+    and 1 for the caller's collect."""
     edges = spark.createDataFrame(_PPR_EDGES, "src string, dst string, w double")
     seeds = spark.createDataFrame([("a",)], "node string")
     run = lambda: _RANKERS[op](edges, seeds, driver_threshold=0).collect()  # noqa: E731

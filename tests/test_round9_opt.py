@@ -1,7 +1,8 @@
 """Round-9 optimization pins.
 
 Plan/semantics pins for the r9 changes: batched iterative-loop probes
-(same labels/ranks, fewer probe jobs, probe knobs validated at entry),
+(same labels/ranks, fewer probe jobs; the cadences are module
+constants, set here through ``monkeypatch``),
 ``keep_cols`` pass-through that refuses duplicate output names, the
 one-scan split-cohort
 two-sample counts (row-identical to the two-filter + full-outer form,
@@ -110,9 +111,9 @@ def test_split_two_sample_counts_equal_joined_form(spark):
 
 
 @pytest.mark.parametrize("probe_every", [1, 3])
-def test_pagerank_distributed_probe_cadence_identical(spark, probe_every):
+def test_pagerank_distributed_probe_cadence_identical(spark, monkeypatch, probe_every):
     """Batched invariant probes must not change the distributed loop's
-    output — probe_every=1 is the old per-round schedule."""
+    output — PROBE_EVERY=1 is the old per-round schedule."""
     from data_quality_checks_in_relational_database_spark.operators.graph import (
         pagerank,
     )
@@ -121,11 +122,10 @@ def test_pagerank_distributed_probe_cadence_identical(spark, probe_every):
         [("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 1.0), ("c", "d", 3.0)],
         schema="src string, dst string, w double",
     )
+    monkeypatch.setattr(graph, "PROBE_EVERY", probe_every)
     got = {
         r["node"]: r["rank"]
-        for r in pagerank(
-            edges, weight_col="w", driver_threshold=0, probe_every=probe_every
-        ).collect()
+        for r in pagerank(edges, weight_col="w", driver_threshold=0).collect()
     }
     want = {
         r["node"]: r["rank"]
@@ -135,7 +135,7 @@ def test_pagerank_distributed_probe_cadence_identical(spark, probe_every):
     _sweep(spark)
 
 
-def test_connected_components_stride_probe_identical_and_fewer_jobs(spark):
+def test_connected_components_stride_probe_identical_and_fewer_jobs(spark, monkeypatch):
     """The warmup-then-stride convergence probing must label a deep
     chain identically to per-round probing, with strictly fewer probe
     jobs (the job-group count is the measurable artifact)."""
@@ -152,16 +152,13 @@ def test_connected_components_stride_probe_identical_and_fewer_jobs(spark):
     )
     sc = spark.sparkContext
     out, jobs = {}, {}
+    monkeypatch.setattr(cluster, "PROBE_WARMUP", 2)
     for lbl, stride in (("old", 1), ("new", 4)):
+        monkeypatch.setattr(cluster, "PROBE_STRIDE", stride)
         group = f"cc-cadence-{lbl}"
         sc.setJobGroup(group, group)
         out[lbl] = sorted(
-            map(
-                tuple,
-                connected_components(
-                    chain, driver_threshold=0, probe_warmup=2, probe_stride=stride
-                ).collect(),
-            )
+            map(tuple, connected_components(chain, driver_threshold=0).collect())
         )
         jobs[lbl] = len(sc.statusTracker().getJobIdsForGroup(group))
         sc.setJobGroup(None, None)
@@ -170,8 +167,8 @@ def test_connected_components_stride_probe_identical_and_fewer_jobs(spark):
     assert jobs["new"] < jobs["old"], jobs
 
 
-def test_nonconvergence_raise_contract_survives_stride(spark):
-    """probe_stride > 1 must not weaken the raise contract: a chain
+def test_nonconvergence_raise_contract_survives_stride(spark, monkeypatch):
+    """PROBE_STRIDE > 1 must not weaken the raise contract: a chain
     that cannot converge within max_iter still raises (probes at
     max_iter-1 and max_iter reproduce the eager schedule's verdict)."""
     from data_quality_checks_in_relational_database_spark.operators.cluster import (
@@ -181,32 +178,13 @@ def test_nonconvergence_raise_contract_survives_stride(spark):
     chain = spark.createDataFrame(
         [(i + 1, i) for i in range(10)], schema="doc_id_a long, doc_id_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            chain, max_iter=3, driver_threshold=0, probe_warmup=2, probe_stride=4
-        )
+    monkeypatch.setattr(cluster, "PROBE_WARMUP", 2)
+    monkeypatch.setattr(cluster, "PROBE_STRIDE", 4)
     _sweep(spark)
-
-
-@pytest.mark.parametrize(
-    "fn, kwargs",
-    [
-        (cluster.connected_components, {"probe_stride": 0}),
-        (cluster.connected_components, {"probe_warmup": -1}),
-        (graph.pagerank, {"probe_every": 0}),
-        (graph.personalized_pagerank, {"probe_every": 0}),
-        (graph.hits_scores, {"probe_every": 0}),
-    ],
-    ids=["cc_stride", "cc_warmup", "pagerank", "ppr", "hits"],
-)
-def test_probe_knobs_validated_at_entry(spark, fn, kwargs):
-    """A non-positive probe cadence must raise before any work: a zero
-    stride would loop forever building the probe schedule, a zero
-    probe_every would divide by zero mid-loop."""
-    edges = spark.createDataFrame([(1, 0)], schema="src long, dst long")
-    seeds = (edges,) if fn is graph.personalized_pagerank else ()
-    with pytest.raises(ValueError, match="probe"):
-        fn(edges, *seeds, driver_threshold=0, **kwargs)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=3, driver_threshold=0)
+    assert _n_persistent(spark) == 0  # the raise freed every pin and round
+    _sweep(spark)
 
 
 @pytest.mark.parametrize("bad", ["doc_id", "n_tokens", "score", "keep"])
@@ -238,4 +216,50 @@ def test_label_propagation_distributed_frees_round_checkpoints(spark):
     assert _n_persistent(spark) - before <= 1
     want = cluster.label_propagation(pairs, rounds=4).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    _sweep(spark)
+
+
+_GRAPH = [(1, 2), (2, 3), (3, 1), (1, 4), (5, 6)]
+
+# every iterative operator, on both sides of its size switch where it
+# has one; each call takes (pairs as doc_id_a/doc_id_b, seeds) + kwargs.
+# Two rounds each: what a call leaves cached does not depend on how many.
+_ITERATIVE = {
+    "components": lambda p, s, **kw: cluster.connected_components(p, **kw),
+    "components_star": lambda p, s, **kw: cluster.connected_components_star(p),
+    "label_propagation": lambda p, s, **kw: cluster.label_propagation(p, rounds=2, **kw),
+    "pagerank": lambda p, s, **kw: graph.pagerank(p, "doc_id_a", "doc_id_b", iters=2, **kw),
+    "ppr": lambda p, s, **kw: graph.personalized_pagerank(
+        p, s, "doc_id_a", "doc_id_b", iters=2, **kw
+    ),
+    "hits": lambda p, s, **kw: graph.hits_scores(p, "doc_id_a", "doc_id_b", iters=2, **kw),
+    "bfs_hops": lambda p, s, **kw: graph.bfs_hops(
+        p, s, max_hops=2, src="doc_id_a", dst="doc_id_b"
+    ),
+    "kcore_peel": lambda p, s, **kw: graph.kcore_peel(
+        p, k=2, rounds=2, src="doc_id_a", dst="doc_id_b"
+    ),
+}
+_SWITCHLESS = {"components_star", "bfs_hops", "kcore_peel"}
+
+
+@pytest.mark.parametrize(
+    "op, path",
+    [
+        (op, path)
+        for op in sorted(_ITERATIVE)
+        for path in ("default", "forced_distributed")
+        if path == "default" or op not in _SWITCHLESS
+    ],
+)
+def test_iterative_operator_leaves_only_its_result_cached(spark, op, path):
+    """After a sweep, one call plus its collect leaves at most the one
+    persistent RDD backing the result: every pin and round checkpoint
+    the call made is freed before it returns."""
+    _sweep(spark)
+    pairs = spark.createDataFrame(_GRAPH, "doc_id_a long, doc_id_b long")
+    seeds = spark.createDataFrame([(1,)], "node long")
+    kw = {"driver_threshold": 0} if path == "forced_distributed" else {}
+    assert _ITERATIVE[op](pairs, seeds, **kw).collect()
+    assert _n_persistent(spark) <= 1
     _sweep(spark)
