@@ -21,6 +21,10 @@ Scale design (the point of each variant):
 - **embedding cosine**: near-dup = cosine ≥ τ over unit vectors;
   brute-force blocked self-join here, random-hyperplane LSH in
   ``operators.similarity`` as the scale path.
+
+Every pair operator over shingle sets pins through one
+``session.CheckpointScope`` (MinHash sketches via :func:`_sketch`) and
+returns ``scope.keep(result)``; no pin outlives the call or its raise.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql.window import Window
 
 from data_quality_checks_in_relational_database_spark.functions.scalars import rebalance
 from data_quality_checks_in_relational_database_spark.operators.text import fingerprint, shingles, tokens
+from data_quality_checks_in_relational_database_spark.session import CheckpointScope
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -202,48 +207,51 @@ def ngram_jaccard_pairs(
     are exact; a qualifying pair is missed only if it shares no
     sub-cap shingle (vanishingly unlikely at useful thresholds).
     """
-    from pyspark import StorageLevel
-
-    # sets_ feeds the inverted index (both join sides) AND the
-    # verification join-backs — pin it once like the minhash path does
-    sets_ = shingle_sets(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    if max_doc_freq is None:
-        sizes = sets_.select(F.col(id_col).alias("sid"), F.size("shingles").alias("set_size"))
-        inv = sets_.select(F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle"))
-        a, b = inv.alias("a"), inv.alias("b")
-        shared = (
-            a.join(
-                b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.sid") < F.col("b.sid"))
+    with CheckpointScope(df.sparkSession) as scope:
+        # sets_ feeds the inverted index (both join sides) AND the
+        # sizes or verification join-backs: pin it once
+        sets_ = scope.pin(shingle_sets(df, text_col, id_col, n))
+        if max_doc_freq is None:
+            jac = F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared"))
+            return scope.keep(
+                _shared_counts(sets_, id_col)
+                .withColumn("jaccard", jac)
+                .filter(F.col("jaccard") >= threshold)
+                .select("doc_id_a", "doc_id_b", "jaccard")
             )
-            .groupBy(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-        sz_a = sizes.select(F.col("sid").alias("doc_id_a"), F.col("set_size").alias("size_a"))
-        sz_b = sizes.select(F.col("sid").alias("doc_id_b"), F.col("set_size").alias("size_b"))
-        jac = F.col("shared") / (F.col("size_a") + F.col("size_b") - F.col("shared"))
-        return (
-            shared.join(sz_a, "doc_id_a")
-            .join(sz_b, "doc_id_b")
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_id_a", "doc_id_b", "jaccard")
-        )
 
+        inv = sets_.select(F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle"))
+        rare = (
+            inv.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= max_doc_freq)
+            .select("shingle")
+        )
+        capped = inv.join(rare, "shingle")
+        a, b = capped.alias("a"), capped.alias("b")
+        cand = (
+            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.sid") < F.col("b.sid")))
+            .select(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
+            .dropDuplicates(["doc_id_a", "doc_id_b"])
+        )
+        return scope.keep(_verify_jaccard(cand, sets_, sets_, threshold, id_col))
+
+
+def _shared_counts(sets_: DataFrame, id_col: str) -> DataFrame:
+    """``(doc_id_a, doc_id_b, shared, size_a, size_b)`` for every pair
+    a < b sharing ≥ 1 shingle, by inverted index (cost ∝ the pairs
+    sharing a shingle, never N²), both set sizes joined back."""
+    sizes = sets_.select(F.col(id_col).alias("sid"), F.size("shingles").alias("set_size"))
     inv = sets_.select(F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle"))
-    rare = (
-        inv.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_doc_freq)
-        .select("shingle")
-    )
-    capped = inv.join(rare, "shingle")
-    a, b = capped.alias("a"), capped.alias("b")
-    cand = (
+    a, b = inv.alias("a"), inv.alias("b")
+    shared = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.sid") < F.col("b.sid")))
-        .select(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
+        .groupBy(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
     )
-    return _verify_jaccard(cand, sets_, sets_, threshold, id_col)
+    sz_a = sizes.select(F.col("sid").alias("doc_id_a"), F.col("set_size").alias("size_a"))
+    sz_b = sizes.select(F.col("sid").alias("doc_id_b"), F.col("set_size").alias("size_b"))
+    return shared.join(sz_a, "doc_id_a").join(sz_b, "doc_id_b")
 
 
 def containment_pairs(
@@ -260,39 +268,26 @@ def containment_pairs(
     sketch's exact form; dataset curation uses it to drop subset
     documents while keeping the superset.
 
-    Same inverted-index shape as :func:`ngram_jaccard_pairs` (explode →
-    shingle self-join → shared counts), emitting BOTH directions when
-    both clear the threshold. Output: (doc_id_small, doc_id_big,
-    containment) where `small` is the contained side.
+    Same inverted-index shared counts as :func:`ngram_jaccard_pairs`
+    (:func:`_shared_counts` over pinned shingle sets), emitting BOTH
+    directions when both clear the threshold. Output: (doc_id_small,
+    doc_id_big, containment) where `small` is the contained side.
     """
-    from pyspark import StorageLevel
-
-    # four plan references (sizes, both index sides, join-backs) — pin
-    sets_ = shingle_sets(df, text_col, id_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sets_.select(F.col(id_col).alias("sid"), F.size("shingles").alias("set_size"))
-    inv = sets_.select(F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle"))
-    a, b = inv.alias("a"), inv.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.sid") < F.col("b.sid")))
-        .groupBy(F.col("a.sid").alias("id_a"), F.col("b.sid").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sz_a = sizes.select(F.col("sid").alias("id_a"), F.col("set_size").alias("size_a"))
-    sz_b = sizes.select(F.col("sid").alias("id_b"), F.col("set_size").alias("size_b"))
-    both = shared.join(sz_a, "id_a").join(sz_b, "id_b")
-    # emit one row per DIRECTION that clears the threshold: the
-    # contained (smaller-denominator) side is doc_id_small
-    fwd = both.select(
-        F.col("id_a").alias("doc_id_small"),
-        F.col("id_b").alias("doc_id_big"),
-        (F.col("shared") / F.col("size_a")).alias("containment"),
-    )
-    rev = both.select(
-        F.col("id_b").alias("doc_id_small"),
-        F.col("id_a").alias("doc_id_big"),
-        (F.col("shared") / F.col("size_b")).alias("containment"),
-    )
-    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
+    with CheckpointScope(df.sparkSession) as scope:
+        both = _shared_counts(scope.pin(shingle_sets(df, text_col, id_col, n)), id_col)
+        # emit one row per DIRECTION that clears the threshold: the
+        # contained (smaller-denominator) side is doc_id_small
+        fwd = both.select(
+            F.col("doc_id_a").alias("doc_id_small"),
+            F.col("doc_id_b").alias("doc_id_big"),
+            (F.col("shared") / F.col("size_a")).alias("containment"),
+        )
+        rev = both.select(
+            F.col("doc_id_b").alias("doc_id_small"),
+            F.col("doc_id_a").alias("doc_id_big"),
+            (F.col("shared") / F.col("size_b")).alias("containment"),
+        )
+        return scope.keep(fwd.unionByName(rev).filter(F.col("containment") >= threshold))
 
 
 # ---------------------------------------------------------------------------
@@ -428,6 +423,20 @@ def _write_ledger(sets_: DataFrame, bands: DataFrame, path: str, id_col: str) ->
     ).write.mode("overwrite").parquet(f"{path}/bands")
 
 
+def _sketch(
+    scope: CheckpointScope, df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(shingle sets, band rows)`` of ``df``, both pinned in ``scope``
+    and filled by ONE eager ``bands.count()`` (r8): building the bands
+    reads the cold sets cache, which stores the sets as a byproduct, so
+    every later consumer reads warm caches and the tokenize→shingle
+    lineage runs once."""
+    sets_ = scope.pin(shingle_sets(df, text_col, id_col, SHINGLE_N))
+    bands = scope.pin(_band_rows(minhash_signatures(sets_, id_col), id_col))
+    bands.count()
+    return sets_, bands
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -468,36 +477,19 @@ def minhash_lsh_pairs(
     Output: (doc_id_a, doc_id_b, jaccard) — same schema as the exact
     baseline so recall is directly testable.
     """
-    # the shingle-set table is consumed three times (signatures + both
-    # sides of candidate verification); persist it instead of recomputing
-    # the tokenize→shingle lineage per consumer. At warehouse scale the
-    # equivalent move is materializing the shingle/signature table once
-    # per corpus snapshot (MEMORY_AND_DISK spills, never OOMs).
-    from pyspark import StorageLevel
-
-    sets_ = shingle_sets(df, text_col, id_col, SHINGLE_N).persist(StorageLevel.MEMORY_AND_DISK)
-    # the signature table feeds both sides of the band self-join;
-    # persisting it (NUM_PERM longs/doc — smaller than the shingle sets)
-    # avoids recomputing the explode+aggregate per join branch
-    sig = minhash_signatures(sets_, id_col).persist(StorageLevel.MEMORY_AND_DISK)
-    # ONE eager fill does both caches (r8): computing sig reads sets_
-    # through its cold InMemoryRelation, which stores sets_'s partitions
-    # as a byproduct — so by the time the band self-join and both
-    # verification branches run (the concurrent consumers the eager fill
-    # exists to protect, see cluster.connected_components), both caches
-    # are warm. The former separate sets_.count() was a second full
-    # pass + job for no additional safety.
-    sig.count()
-    banded = _band_rows(sig, id_col)
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("sz"))
-            .where(F.col("sz") > int(max_bucket_size))
-            .select("band", "band_hash")
+    with CheckpointScope(df.sparkSession) as scope:
+        sets_, banded = _sketch(scope, df, text_col, id_col)
+        if max_bucket_size is not None:
+            hot = (
+                banded.groupBy("band", "band_hash")
+                .agg(F.count(F.lit(1)).alias("sz"))
+                .where(F.col("sz") > int(max_bucket_size))
+                .select("band", "band_hash")
+            )
+            banded = banded.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
+        return scope.keep(
+            _band_pairs(sets_, banded, sets_, banded, threshold, id_col, "doc_id_a", "doc_id_b")
         )
-        banded = banded.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
-    return _band_pairs(sets_, banded, sets_, banded, threshold, id_col, "doc_id_a", "doc_id_b")
 
 
 def minhash_lsh_pairs_against(
@@ -511,40 +503,24 @@ def minhash_lsh_pairs_against(
     against an EXISTING corpus, verified with exact Jaccard — the
     production shape for ingesting dump N+1 against an already-built
     corpus (only the new batch is sketched from scratch; at warehouse
-    scale the corpus side reads a materialized signature/shingle table
-    instead of recomputing, which is exactly the `sets_/sig` frames
-    this function builds from ``corpus_df``).
+    scale the corpus side reads a materialized shingle/band table
+    instead of recomputing, which is exactly what :func:`_sketch` pins
+    for ``corpus_df`` here, see :func:`minhash_pairs_against_ledger`).
+    Each side is filled by its own eager count before the band join.
 
     Same banding math and the same candidates-only verification join as
     :func:`minhash_lsh_pairs`; the band join is new×corpus (no self-join
     triangle condition — the sets are disjoint by contract).
     Output: (new_id, corpus_id, jaccard).
     """
-    from pyspark import StorageLevel
-
-    def _sketch(df: DataFrame):
-        # no eager fill here (r8), with the honest caveat (r9): the
-        # verify join's shingle-side exchange does NOT depend on the
-        # band-join candidates, so under AQE it and the signature stage
-        # are independent leaf stages that CAN both hit the cold sets_
-        # cache concurrently and duplicate the tokenize→shingle pass.
-        # Inputs are deterministic, so the race is perf-only. Accepted
-        # on measurement: dropping the fills tracked faster in r8
-        # (incremental_dedup 3.31→2.85 s), and the same
-        # eager-vs-racing A/B came out a wash-or-loss for the eager
-        # fill on three sibling shapes (r9: corpus_clean med 2.33→2.56,
-        # gram partials 1.106→1.088; r8: skew_split_join +30%) — the
-        # duplicated map-side pass runs in otherwise-idle slots, while
-        # an eager fill serializes the query on a barrier. Revisit only
-        # with a cluster-scale number.
-        sets_ = shingle_sets(df, text_col, id_col, SHINGLE_N).persist(StorageLevel.MEMORY_AND_DISK)
-        return sets_, _band_rows(minhash_signatures(sets_, id_col), id_col)
-
-    new_sets, new_bands = _sketch(new_df)
-    corp_sets, corp_bands = _sketch(corpus_df)
-    return _band_pairs(
-        new_sets, new_bands, corp_sets, corp_bands, threshold, id_col, "new_id", "corpus_id"
-    )
+    with CheckpointScope(new_df.sparkSession) as scope:
+        new_sets, new_bands = _sketch(scope, new_df, text_col, id_col)
+        corp_sets, corp_bands = _sketch(scope, corpus_df, text_col, id_col)
+        return scope.keep(
+            _band_pairs(
+                new_sets, new_bands, corp_sets, corp_bands, threshold, id_col, "new_id", "corpus_id"
+            )
+        )
 
 
 def write_minhash_ledger(
@@ -565,8 +541,9 @@ def write_minhash_ledger(
     :func:`..streaming.dedup.apply_ingest_batch` advances a ledger by
     one batch per committed version.
     """
-    sets_ = shingle_sets(df, text_col, id_col, SHINGLE_N)
-    _write_ledger(sets_, _band_rows(minhash_signatures(sets_, id_col), id_col), path, id_col)
+    with CheckpointScope(df.sparkSession) as scope:
+        # both writes read the pinned sketch: one tokenize→shingle pass
+        _write_ledger(*_sketch(scope, df, text_col, id_col), path, id_col)
 
 
 def minhash_pairs_against_ledger(
@@ -583,17 +560,14 @@ def minhash_pairs_against_ledger(
     verified candidates only. The ledger must have been written with the
     current NUM_PERM/BANDS/SHINGLE_N.
     """
-    from pyspark import StorageLevel
-
-    new_sets = shingle_sets(new_df, text_col, id_col, SHINGLE_N).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    new_sets.count()  # eager fill: see minhash_lsh_pairs
-    new_bands = _band_rows(minhash_signatures(new_sets, id_col), id_col)
-    corp_sets, corp_bands = _read_ledger(new_df.sparkSession, ledger_path, id_col)
-    return _band_pairs(
-        new_sets, new_bands, corp_sets, corp_bands, threshold, id_col, "new_id", "corpus_id"
-    )
+    with CheckpointScope(new_df.sparkSession) as scope:
+        new_sets, new_bands = _sketch(scope, new_df, text_col, id_col)
+        corp_sets, corp_bands = _read_ledger(new_df.sparkSession, ledger_path, id_col)
+        return scope.keep(
+            _band_pairs(
+                new_sets, new_bands, corp_sets, corp_bands, threshold, id_col, "new_id", "corpus_id"
+            )
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -798,76 +772,73 @@ def prefix_filter_jaccard_pairs(
     index) and candidate pairs — never all pairs. Output and values
     identical to :func:`ngram_jaccard_pairs` (same oracle shape).
     """
-    from pyspark import StorageLevel
-
     thr_milli = int(round(threshold * 1000))
-    sets_ = shingle_sets(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    inv = sets_.select(
-        F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle")
-    )
-    dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("sh_df"))
-    # per-doc prefix under the global (df asc, shingle asc) order; the
-    # collect_list is the doc's OWN shingle set — bounded per row
-    p_len = (
-        F.col("set_size")
-        - F.floor((F.col("set_size") * thr_milli + 999) / 1000)
-        + 1
-    ).cast("int")
-    pref = (
-        inv.join(dfreq, "shingle")
-        .groupBy("sid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("sh_df"), F.col("shingle")))
-            ).alias("ordered"),
-            F.count(F.lit(1)).alias("set_size"),
+    with CheckpointScope(df.sparkSession) as scope:
+        sets_ = scope.pin(shingle_sets(df, text_col, id_col, n))
+        inv = sets_.select(
+            F.col(id_col).alias("sid"), F.explode("shingles").alias("shingle")
         )
-        .select(
-            "sid",
-            "set_size",
-            F.posexplode(F.slice("ordered", 1, p_len)).alias("pos", "p"),
+        dfreq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("sh_df"))
+        # per-doc prefix under the global (df asc, shingle asc) order; the
+        # collect_list is the doc's OWN shingle set — bounded per row
+        p_len = (
+            F.col("set_size")
+            - F.floor((F.col("set_size") * thr_milli + 999) / 1000)
+            + 1
+        ).cast("int")
+        pref = (
+            inv.join(dfreq, "shingle")
+            .groupBy("sid")
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("sh_df"), F.col("shingle")))
+                ).alias("ordered"),
+                F.count(F.lit(1)).alias("set_size"),
+            )
+            .select(
+                "sid",
+                "set_size",
+                F.posexplode(F.slice("ordered", 1, p_len)).alias("pos", "p"),
+            )
+            .select(
+                "sid", "set_size", "pos", F.col("p.shingle").alias("shingle")
+            )
         )
-        .select(
-            "sid", "set_size", "pos", F.col("p.shingle").alias("shingle")
+        a = pref.select(
+            F.col("sid").alias("doc_id_a"), F.col("set_size").alias("size_a"),
+            F.col("pos").alias("pa"), "shingle",
         )
-    )
-    a = pref.select(
-        F.col("sid").alias("doc_id_a"), F.col("set_size").alias("size_a"),
-        F.col("pos").alias("pa"), "shingle",
-    )
-    b = pref.select(
-        F.col("sid").alias("doc_id_b"), F.col("set_size").alias("size_b"),
-        F.col("pos").alias("pb"), "shingle",
-    )
-    # overlap upper bound at the matched positions vs the exact integer
-    # overlap floor: O ≥ t(sa+sb)/(1+t)  ⟺  O·(1000+t_milli) ≥
-    # t_milli·(sa+sb) for integer O
-    ubound = (
-        F.least("pa", "pb")
-        + 1
-        + F.least(
-            F.col("size_a") - F.col("pa") - 1,
-            F.col("size_b") - F.col("pb") - 1,
+        b = pref.select(
+            F.col("sid").alias("doc_id_b"), F.col("set_size").alias("size_b"),
+            F.col("pos").alias("pb"), "shingle",
         )
-    )
-    cands = (
-        a.join(b, "shingle")
-        .where(F.col("doc_id_a") < F.col("doc_id_b"))
-        # J ≤ min(|A|,|B|)/max(|A|,|B|): exact integer length prune
-        .where(
-            F.least("size_a", "size_b") * 1000
-            >= F.lit(thr_milli) * F.greatest("size_a", "size_b")
+        # overlap upper bound at the matched positions vs the exact integer
+        # overlap floor: O ≥ t(sa+sb)/(1+t)  ⟺  O·(1000+t_milli) ≥
+        # t_milli·(sa+sb) for integer O
+        ubound = (
+            F.least("pa", "pb")
+            + 1
+            + F.least(
+                F.col("size_a") - F.col("pa") - 1,
+                F.col("size_b") - F.col("pb") - 1,
+            )
         )
-        .where(
-            ubound * F.lit(1000 + thr_milli)
-            >= F.lit(thr_milli) * (F.col("size_a") + F.col("size_b"))
+        cands = (
+            a.join(b, "shingle")
+            .where(F.col("doc_id_a") < F.col("doc_id_b"))
+            # J ≤ min(|A|,|B|)/max(|A|,|B|): exact integer length prune
+            .where(
+                F.least("size_a", "size_b") * 1000
+                >= F.lit(thr_milli) * F.greatest("size_a", "size_b")
+            )
+            .where(
+                ubound * F.lit(1000 + thr_milli)
+                >= F.lit(thr_milli) * (F.col("size_a") + F.col("size_b"))
+            )
+            .select("doc_id_a", "doc_id_b")
+            .dropDuplicates(["doc_id_a", "doc_id_b"])
         )
-        .select("doc_id_a", "doc_id_b")
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    return _verify_jaccard(cands, sets_, sets_, threshold, id_col)
+        return scope.keep(_verify_jaccard(cands, sets_, sets_, threshold, id_col))
 
 
 def golden_records(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_quality_checks_in_relational_database_spark.functions.scalars import token_count
+from data_quality_checks_in_relational_database_spark.session import CheckpointScope
 
 #: Marker stopwords per language for the n-gram/markers language-ID
 #: heuristic. Deliberately tiny and deterministic: the operator is the
@@ -1026,6 +1027,9 @@ def tfidf_cosine_pairs(
 
     Output: ``(doc_id_a, doc_id_b, cosine)`` with a < b, cosine rounded
     to ``prec``. Only pairs sharing ≥1 surviving gram materialize.
+
+    Pins ``tf``/``widx`` in one ``session.CheckpointScope`` and returns
+    the kept (checkpointed) result; no pin outlives the call or its raise.
     """
     staged = df.select(F.col(id_col), F.col(text_col))
     from data_quality_checks_in_relational_database_spark.functions.scalars import (
@@ -1042,103 +1046,89 @@ def tfidf_cosine_pairs(
             F.transform(idx, lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, n)))
         ).alias("term"),
     )
-    tf = grams.groupBy("sid", "term").agg(F.count(F.lit(1)).alias("tf"))
-    # tf is consumed by FOUR subtrees (the n_docs scalar, dfreq, and —
-    # via widx — the norms pass and both sides of the postings
-    # self-join); column pruning pushes a different projection into
-    # each, so exchange reuse cannot merge them and an unpinned plan
-    # re-runs tokenize→gram-explode→count per consumer (measured: 16
-    # parquet scans, 0 ReusedExchange in the r8 before-plan; ~4.5 s at
-    # sf0.1). Pin the postings table once — the same
-    # materialize-the-narrow-intermediate move the dedup pipeline makes
-    # for shingle sets; at warehouse scale this is "materialize the
-    # postings table once per corpus snapshot" (MEMORY_AND_DISK spills,
-    # never OOMs).
-    from pyspark import StorageLevel
+    with CheckpointScope(df.sparkSession) as scope:
+        # tf is consumed by FOUR subtrees (the n_docs scalar, dfreq,
+        # and, via widx, the norms pass and both sides of the postings
+        # self-join); column pruning pushes a different projection into
+        # each, so exchange reuse cannot merge them and an unpinned plan
+        # re-runs tokenize→gram-explode→count per consumer (measured: 16
+        # parquet scans, 0 ReusedExchange in the r8 before-plan; ~4.5 s
+        # at sf0.1). Pin the postings table once, the same
+        # materialize-the-narrow-intermediate move the dedup pipeline
+        # makes for shingle sets.
+        tf = scope.pin(grams.groupBy("sid", "term").agg(F.count(F.lit(1)).alias("tf")))
+        n_docs = tf.select("sid").distinct().count()  # 1 scalar + eager cache fill
+        if n_docs == 0:
+            return df.sparkSession.createDataFrame(
+                [], schema="doc_id_a long, doc_id_b long, cosine double"
+            )
+        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        if max_doc_freq is not None:
+            dfreq = dfreq.where(F.col("df") <= max_doc_freq)
+        # zero-weight terms (df = N ⇒ idf 0) contribute nothing to dots
+        # or norms but own the LARGEST postings lists — dropping them is
+        # both the pruning win and the zero-norm guard (a doc made
+        # entirely of such terms has no vector; its pairs vanish with it
+        # instead of dividing by a zero norm under ANSI mode). widx
+        # feeds three subtrees (norms + both self-join sides): pin it
+        # and fill eagerly — three branches hitting a cold cache
+        # concurrently inside one action would each recompute the fill.
+        widx = tf.join(dfreq, "term").select(
+            "sid",
+            "term",
+            (
+                F.col("tf")
+                * F.round(
+                    F.log(F.lit(float(n_docs)) / F.col("df").cast("double"))
+                    * idf_scale
+                ).cast("long")
+            ).alias("w"),
+        ).where(F.col("w") != 0)
+        widx = scope.pin(widx)
+        widx.count()
+        if max_candidates_per_posting is not None:
+            # ENFORCED candidate budget (r6 verdict #5): the postings
+            # self-join materializes Σ C(df, 2) candidate rows over the
+            # SURVIVING vocabulary — a saturating vocabulary (boilerplate
+            # grams shared corpus-wide) sends that quadratic while the
+            # output stays small. Price it with one keyed aggregation
+            # BEFORE building the join; refuse loudly past the budget
+            # and name the capped twin (max_doc_freq drops the saturated
+            # grams from the vocabulary — an exact contract change, not
+            # a lossy approximation).
+            from data_quality_checks_in_relational_database_spark.operators.fuzzy import (
+                _enforce_candidate_budget,
+            )
 
-    # Session-lifetime note (applies to tf and widx below): the pins
-    # back the RETURNED frame, so the operator cannot unpersist them
-    # before the caller's action runs — they live until the caller
-    # sweeps (`spark.catalog.clearCache()` + persistent-RDD unpersist,
-    # as bench.py does between queries) or the session ends.
-    # MEMORY_AND_DISK degrades instead of OOMing under pressure.
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-    n_docs = tf.select("sid").distinct().count()  # 1 scalar + eager cache fill
-    if n_docs == 0:
-        # nothing downstream will ever read the pin — release it now
-        # rather than leaking an empty-but-registered cache entry
-        tf.unpersist()
-        return df.sparkSession.createDataFrame(
-            [], schema="doc_id_a long, doc_id_b long, cosine double"
+            _enforce_candidate_budget(
+                widx.select(F.col("term").alias("blk0")),
+                n_block_cols=1,
+                max_pairs_per_record=max_candidates_per_posting,
+                op_name="tfidf_cosine_pairs",
+                alternative=(
+                    "pass max_doc_freq to drop the saturated grams from the "
+                    "vocabulary (the tfidf_cosine_pairs_capped contract), or "
+                    "raise n so grams carry more context and df falls."
+                ),
+            )
+        norms = widx.groupBy("sid").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
+        a, b = widx.alias("a"), widx.alias("b")
+        dots = (
+            a.join(
+                b,
+                (F.col("a.term") == F.col("b.term")) & (F.col("a.sid") < F.col("b.sid")),
+            )
+            .groupBy(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
+            .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
         )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if max_doc_freq is not None:
-        dfreq = dfreq.where(F.col("df") <= max_doc_freq)
-    widx = tf.join(dfreq, "term").select(
-        "sid",
-        "term",
-        (
-            F.col("tf")
-            * F.round(
-                F.log(F.lit(float(n_docs)) / F.col("df").cast("double"))
-                * idf_scale
-            ).cast("long")
-        ).alias("w"),
-    ).where(F.col("w") != 0)
-    # zero-weight terms (df = N ⇒ idf 0) contribute nothing to dots or
-    # norms but own the LARGEST postings lists — dropping them here is
-    # both the pruning win and the zero-norm guard (a doc made entirely
-    # of such terms has no vector; its pairs vanish with it instead of
-    # dividing by a zero norm under ANSI mode)
-    # widx feeds three subtrees (norms + both self-join sides): pin it
-    # and fill eagerly — three branches hitting a cold cache
-    # concurrently inside one action would each recompute the fill
-    # (the race minhash_lsh_pairs documents).
-    widx = widx.persist(StorageLevel.MEMORY_AND_DISK)
-    widx.count()
-    if max_candidates_per_posting is not None:
-        # ENFORCED candidate budget (r6 verdict #5): the postings
-        # self-join materializes Σ C(df, 2) candidate rows over the
-        # SURVIVING vocabulary — a saturating vocabulary (boilerplate
-        # grams shared corpus-wide) sends that quadratic while the
-        # output stays small. Price it with one keyed aggregation
-        # BEFORE building the join; refuse loudly past the budget and
-        # name the capped twin (max_doc_freq drops the saturated grams
-        # from the vocabulary — an exact contract change, not a lossy
-        # approximation).
-        from data_quality_checks_in_relational_database_spark.operators.fuzzy import (
-            _enforce_candidate_budget,
+        na = norms.select(F.col("sid").alias("doc_id_a"), F.col("n2").alias("na2"))
+        nb = norms.select(F.col("sid").alias("doc_id_b"), F.col("n2").alias("nb2"))
+        cos = F.col("dot").cast("double") / (
+            F.sqrt(F.col("na2").cast("double")) * F.sqrt(F.col("nb2").cast("double"))
         )
-
-        _enforce_candidate_budget(
-            widx.select(F.col("term").alias("blk0")),
-            n_block_cols=1,
-            max_pairs_per_record=max_candidates_per_posting,
-            op_name="tfidf_cosine_pairs",
-            alternative=(
-                "pass max_doc_freq to drop the saturated grams from the "
-                "vocabulary (the tfidf_cosine_pairs_capped contract), or "
-                "raise n so grams carry more context and df falls."
-            ),
+        return scope.keep(
+            dots.join(na, "doc_id_a")
+            .join(nb, "doc_id_b")
+            .where(cos >= threshold)
+            .select("doc_id_a", "doc_id_b", F.round(cos, prec).alias("cosine"))
         )
-    norms = widx.groupBy("sid").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-    a, b = widx.alias("a"), widx.alias("b")
-    dots = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term")) & (F.col("a.sid") < F.col("b.sid")),
-        )
-        .groupBy(F.col("a.sid").alias("doc_id_a"), F.col("b.sid").alias("doc_id_b"))
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
-    )
-    na = norms.select(F.col("sid").alias("doc_id_a"), F.col("n2").alias("na2"))
-    nb = norms.select(F.col("sid").alias("doc_id_b"), F.col("n2").alias("nb2"))
-    cos = F.col("dot").cast("double") / (
-        F.sqrt(F.col("na2").cast("double")) * F.sqrt(F.col("nb2").cast("double"))
-    )
-    return (
-        dots.join(na, "doc_id_a")
-        .join(nb, "doc_id_b")
-        .where(cos >= threshold)
-        .select("doc_id_a", "doc_id_b", F.round(cos, prec).alias("cosine"))
-    )

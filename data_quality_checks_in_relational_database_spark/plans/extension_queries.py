@@ -3847,14 +3847,13 @@ def q_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     paraphrases into test. Output per split: doc count, group count,
     and the cross-split near-dup pair count, computed by re-joining
     the verified pair list against the assignment (provably 0; the
-    column IS the audit). The pair list is localCheckpoint-ed once and
-    feeds both the component engine and the audit join."""
+    column IS the audit)."""
     from data_quality_checks_in_relational_database_spark.operators.cluster import (
         dedup_clusters,
     )
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    pairs = dd.minhash_lsh_pairs(docs, threshold=0.5).localCheckpoint()
+    pairs = dd.minhash_lsh_pairs(docs, threshold=0.5)
     comp = dedup_clusters(pairs).select("doc_id", "cluster_id")
     assigned = (
         docs.select("doc_id")

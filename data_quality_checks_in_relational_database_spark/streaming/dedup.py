@@ -11,15 +11,18 @@ replays directly in tests, same as ``streaming/cdc.py``):
    epoch (the ``before=epoch`` bound makes at-least-once retries
    rebuild v<epoch> deterministically from v<epoch-1> + the batch —
    never from its own half-committed output);
-2. shingle and band the batch ONCE (persisted, one eager fill), band-
-   join it against itself and against that ledger, verify candidates
-   by exact Jaccard, and write the batch's duplicate pairs under
-   ``v<epoch>/pairs``;
+2. shingle and band the batch ONCE (``operators.dedup._sketch``: both
+   pinned, one eager fill), band-join it against itself and against
+   that ledger, verify candidates by exact Jaccard, and write the
+   batch's duplicate pairs under ``v<epoch>/pairs``;
 3. write the advanced ledger — the batch's shingles/bands ∪ the
    previous version's — once per table, straight into
    ``v<epoch>/shingles`` and ``v<epoch>/bands`` (safe: v<epoch> is
    never the version being read), then commit the version with a
    ``_COMMIT`` marker.
+
+Steps 2 and 3 run inside one ``session.CheckpointScope``: the batch's
+pins are freed whether the writes succeed or raise.
 
 Cost per batch is O(batch + candidates) for the dedup itself: the
 corpus side contributes a parquet scan of its band table keyed on
@@ -35,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from data_quality_checks_in_relational_database_spark.operators import dedup as dd
+from data_quality_checks_in_relational_database_spark.session import CheckpointScope
 from data_quality_checks_in_relational_database_spark.streaming.epoch_state import (
     COMMIT_MARKER,
     commit_version,
@@ -64,20 +68,12 @@ def apply_ingest_batch(
     Emits this batch's duplicate pairs (vs the prior corpus AND within
     the batch itself) and advances the ledger, all under one committed
     version directory."""
-    from pyspark import StorageLevel
-
     spark = batch_df.sparkSession
     prev = _latest_version(ledger_root, before=int(epoch_id))
     vdir = _version_dir(ledger_root, epoch_id)
 
-    sets_ = dd.shingle_sets(batch_df, text_col, id_col, dd.SHINGLE_N).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    bands = dd._band_rows(dd.minhash_signatures(sets_, id_col), id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        bands.count()  # one eager fill of both caches: see minhash_lsh_pairs
+    with CheckpointScope(spark) as scope:
+        sets_, bands = dd._sketch(scope, batch_df, text_col, id_col)
         pairs = dd._band_pairs(
             sets_, bands, sets_, bands, threshold, id_col, "new_id", "corpus_id"
         )
@@ -92,9 +88,6 @@ def apply_ingest_batch(
             ledger_bands = bands.unionByName(prev_bands)
         pairs.write.mode("overwrite").parquet(os.path.join(vdir, "pairs"))
         dd._write_ledger(ledger_sets, ledger_bands, vdir, id_col)
-    finally:
-        sets_.unpersist()
-        bands.unpersist()
     # commit marker LAST: a crash before this line leaves an
     # uncommitted vdir that the next retry ignores and rewrites
     commit_version(vdir)

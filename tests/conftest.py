@@ -89,3 +89,25 @@ def jobs_in_group(spark, group, action):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def with_executed_plans(spark, build):
+    """``(build(), plans)``: what ``build`` returns and the formatted
+    physical plan of every SQL execution it ran (eager fills, kept
+    results), read from the status store after the listener bus drains.
+    An operator that returns a checkpointed result has only its scan in
+    the returned plan; the work that made it is in these plans."""
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+    before = executions()
+    last = before.apply(before.size() - 1).executionId() if before.size() else -1
+    out = build()
+    after = executions()  # ordered by execution id: read back from the end
+    plans, i = [], after.size() - 1
+    while i >= 0 and after.apply(i).executionId() > last:
+        plans.append(after.apply(i).physicalPlanDescription())
+        i -= 1
+    return out, plans[::-1]

@@ -12,7 +12,7 @@ import re
 import pytest
 
 from data_quality_checks_in_relational_database_spark.plans.registry import REGISTRY
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, with_executed_plans
 
 
 def _formatted(df) -> str:
@@ -68,9 +68,11 @@ def test_pricing_summary_partial_aggregation(spark):
 
 
 def test_minhash_no_python_udfs(spark):
-    """The dedup hot path must stay JVM-side."""
-    df = REGISTRY["minhash_dedup"].fn(spark, SF_SMOKE)
-    plan = _formatted(df)
+    """The dedup hot path must stay JVM-side, in the returned plan and
+    in every plan the build ran (the operator returns a checkpointed
+    result, so the MinHash work itself runs while it is built)."""
+    df, ran = with_executed_plans(spark, lambda: REGISTRY["minhash_dedup"].fn(spark, SF_SMOKE))
+    plan = "\n".join([_formatted(df), *ran])
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -99,19 +101,31 @@ def test_cosine_topk_hof_broadcasts_queries(spark):
 @pytest.fixture(scope="module")
 def built():
     """Registered queries built once for the whole-registry plan sweeps
-    (.rdd, rowwise Python, cartesian, unpartitioned window). Building a
-    query runs its eager fills (counts, driver-side thresholds); the
-    sweeps only read its plans, which the DataFrame keeps, so one build
-    per query serves all four."""
+    (.rdd, rowwise Python, cartesian, unpartitioned window), each as
+    ``(DataFrame, plans)``. Building a query runs its eager fills
+    (counts, driver-side thresholds, checkpointed operator results);
+    ``plans`` are the physical plans those executions ran, recorded
+    once per build. The sweeps only read plans, so one build per query
+    serves all four."""
     cache = {}
     yield cache
     cache.clear()
 
 
+def _build(spark, name):
+    return with_executed_plans(spark, lambda: REGISTRY[name].fn(spark, SF_SMOKE))
+
+
 def _built(built, spark, name):
     if name not in built:
-        built[name] = REGISTRY[name].fn(spark, SF_SMOKE)
+        built[name] = _build(spark, name)
     return built[name]
+
+
+def _all_plans(built, spark, name) -> str:
+    """The returned plan of a built query and every plan its build ran."""
+    df, ran = _built(built, spark, name)
+    return "\n".join([_formatted(df), *ran])
 
 
 def test_no_rdd_conversion_during_query_construction(spark, monkeypatch, built):
@@ -125,10 +139,9 @@ def test_no_rdd_conversion_during_query_construction(spark, monkeypatch, built):
         raise AssertionError("df.rdd accessed during query construction")
 
     monkeypatch.setattr(DataFrame, "rdd", property(_boom))
-    for name, spec in REGISTRY.items():
-        # always a fresh build under the patch (plan construction only;
-        # no action); the sweeps below reuse it
-        built[name] = spec.fn(spark, SF_SMOKE)
+    for name in REGISTRY:
+        # always a fresh build under the patch; the sweeps below reuse it
+        built[name] = _build(spark, name)
 
 
 @pytest.mark.parametrize(
@@ -139,9 +152,7 @@ def test_no_rowwise_python_in_oracle_queries(spark, built, name):
     (media_features legitimately uses ArrowEvalPython/mapInPandas)."""
     if name == "media_features":
         pytest.skip("mapInPandas is the designed Arrow batch path")
-    df = _built(built, spark, name)
-    plan = _formatted(df)
-    assert "BatchEvalPython" not in plan
+    assert "BatchEvalPython" not in _all_plans(built, spark, name)
 
 
 #: Queries where a BroadcastNestedLoopJoin is the DESIGNED plan: either
@@ -217,6 +228,9 @@ BNLJ_ALLOWED = {
     "pagerank_events",
     # 1-row n/dim frames broadcast onto the d² Gramian rows
     "embedding_covariance",
+    # 10-row broadcast query set, in the plan its lazy localCheckpoint
+    # runs while the query is built
+    "matryoshka_audit",
     # inherits bm25's 1-row stats crossJoin and cosine_topk's broadcast
     # query-set crossJoin (both bounded by construction)
     "hybrid_rrf",
@@ -293,8 +307,7 @@ BNLJ_ALLOWED = {
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_accidental_cartesian(spark, built, name):
-    df = _built(built, spark, name)
-    plan = _formatted(df)
+    plan = _all_plans(built, spark, name)
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
     if name not in BNLJ_ALLOWED:
         assert "BroadcastNestedLoop" not in plan, (
@@ -532,7 +545,7 @@ _UNPART_WINDOW = re.compile(r"windowspecdefinition\([^,)]*? (ASC|DESC)")
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_unpartitioned_window_over_data(spark, built, name):
-    df = _built(built, spark, name)
+    df, _ = _built(built, spark, name)
     plan = df._jdf.queryExecution().executedPlan().toString()
     hits = _UNPART_WINDOW.findall(plan)
     if name in GLOBAL_WINDOW_ALLOWED:

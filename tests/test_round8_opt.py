@@ -14,6 +14,8 @@ import re
 
 from pyspark.sql import functions as F
 
+from tests.conftest import with_executed_plans
+
 # same data-dir override the rest of the suite honors (conftest.py)
 SF_DIR = os.environ.get("SPARK_DQ_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -30,15 +32,21 @@ def test_tfidf_postings_pinned_single_lineage(spark):
     InMemoryRelation instead of re-running it per consumer (r8
     before-plan: 16 parquet scans, 0 reuse, no cache node). Text-level
     scan counts are ambiguous once InMemoryRelation expands its cached
-    child inline, so the pin is cache PRESENCE: dropping either persist
-    removes its InMemoryTableScan nodes."""
+    child inline, so the pin is cache PRESENCE: dropping either pin
+    removes its InMemoryTableScan nodes. The operator returns a
+    checkpointed result, so the plans read are the returned one and
+    every plan the build ran."""
     from data_quality_checks_in_relational_database_spark.plans.extension_queries import (
         q_tfidf_cosine_pairs_capped,
     )
 
-    df = q_tfidf_cosine_pairs_capped(spark, SF_DIR)
-    plan = _formatted_plan(df)
+    df, ran = with_executed_plans(spark, lambda: q_tfidf_cosine_pairs_capped(spark, SF_DIR))
+    plan = "\n".join([_formatted_plan(df), *ran])
     assert len(re.findall(r"InMemoryTableScan", plan)) >= 2, plan[:2000]
+    # and each pin is read through its own cache: tf (sid, term, tf)
+    # and widx (sid, term, w); the count above holds with either alone
+    for col in ("tf", "w"):
+        assert re.search(rf"InMemoryTableScan\nOutput \[\d+\]: \[[^\]]*\b{col}#", plan), col
 
 
 def test_dsir_tf_pinned_single_lineage(spark):

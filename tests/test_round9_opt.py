@@ -16,7 +16,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from data_quality_checks_in_relational_database_spark.operators import cluster, graph
+from data_quality_checks_in_relational_database_spark.operators import cluster, dedup, graph, text
+from data_quality_checks_in_relational_database_spark.streaming import dedup as stream_dedup
 
 
 def _sweep(spark) -> None:
@@ -32,11 +33,11 @@ def _n_persistent(spark) -> int:
 
 
 def test_pinned_operators_footprint_sweepable(spark):
-    """Two pinned operators back-to-back register persistent blocks
-    (that is the documented session-lifetime contract: the pins back
-    the returned frame, so the operator cannot release them itself);
-    one bench-style sweep must release every one of them — nothing the
-    operators register survives the caller's documented hygiene."""
+    """Two operators back-to-back register persistent blocks: tfidf's
+    kept (checkpointed) result, and covariance_long's pins, which back
+    the frame it returns lazily; one bench-style sweep must release
+    every one of them — nothing the operators register survives the
+    caller's documented hygiene."""
     from data_quality_checks_in_relational_database_spark.operators.linalg import (
         covariance_long,
     )
@@ -64,8 +65,8 @@ def test_pinned_operators_footprint_sweepable(spark):
 
 
 def test_tfidf_empty_corpus_releases_pin(spark):
-    """The n_docs == 0 early return must unpersist the tf pin instead
-    of leaking an empty-but-registered cache entry (r9 ADVICE fix)."""
+    """The n_docs == 0 early return leaves the operator's scope, which
+    frees the tf pin: no empty-but-registered cache entry is left."""
     from data_quality_checks_in_relational_database_spark.operators.text import (
         tfidf_cosine_pairs,
     )
@@ -262,4 +263,60 @@ def test_iterative_operator_leaves_only_its_result_cached(spark, op, path):
     kw = {"driver_threshold": 0} if path == "forced_distributed" else {}
     assert _ITERATIVE[op](pairs, seeds, **kw).collect()
     assert _n_persistent(spark) <= 1
+    _sweep(spark)
+
+
+# every pair operator over shingle sets; each call takes (corpus, a
+# batch disjoint from it, a ledger root whose v0 holds the corpus) and
+# returns its result frame, or None for the writers and the refusal.
+def _refused(call) -> None:
+    # 6 shared grams × C(20, 2) candidates > 5 per posting
+    with pytest.raises(ValueError, match="max_doc_freq"):
+        call()
+
+
+_SHINGLE_PAIRS = {
+    "minhash": lambda c, b, r: dedup.minhash_lsh_pairs(c),
+    "minhash_bucket_cap": lambda c, b, r: dedup.minhash_lsh_pairs(c, max_bucket_size=4),
+    "minhash_against": lambda c, b, r: dedup.minhash_lsh_pairs_against(b, c),
+    "minhash_against_ledger": lambda c, b, r: dedup.minhash_pairs_against_ledger(
+        b, stream_dedup._version_dir(r, 0)
+    ),
+    "write_ledger": lambda c, b, r: dedup.write_minhash_ledger(c, f"{r}/fresh"),
+    "ingest_batch": lambda c, b, r: stream_dedup.apply_ingest_batch(b, 1, r),
+    "ngram_jaccard": lambda c, b, r: dedup.ngram_jaccard_pairs(c),
+    "ngram_jaccard_capped": lambda c, b, r: dedup.ngram_jaccard_pairs(c, max_doc_freq=6),
+    "containment": lambda c, b, r: dedup.containment_pairs(c),
+    "prefix_filter": lambda c, b, r: dedup.prefix_filter_jaccard_pairs(c),
+    "tfidf": lambda c, b, r: text.tfidf_cosine_pairs(c),
+    "tfidf_over_budget": lambda c, b, r: _refused(
+        lambda: text.tfidf_cosine_pairs(c, max_candidates_per_posting=5)
+    ),
+}
+_NEEDS_LEDGER = {"minhash_against_ledger", "ingest_batch"}
+
+
+@pytest.mark.parametrize("op", sorted(_SHINGLE_PAIRS))
+def test_shingle_pair_operator_leaves_only_its_result_cached(spark, tmp_path, op):
+    """After a sweep, one call plus its collect leaves no CacheManager
+    entry and at most the one persistent RDD backing the result (none
+    for the writers): every pin is freed before the call returns, and
+    before a refused candidate budget propagates."""
+    # 20 near-duplicates sharing 6 of their 7 trigrams (df = 20 < N, so
+    # the shared grams keep a nonzero idf) and two outliers
+    corpus = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta eta theta tail{i % 4}") for i in range(20)]
+        + [(100, "lorem ipsum dolor sit amet"), (101, "one two three four five")],
+        "doc_id long, text string",
+    )
+    batch = corpus.where("doc_id < 4").selectExpr("doc_id + 200 AS doc_id", "text")
+    root = str(tmp_path / "ledger")
+    if op in _NEEDS_LEDGER:
+        stream_dedup.apply_ingest_batch(corpus, 0, root)
+    _sweep(spark)
+    out = _SHINGLE_PAIRS[op](corpus, batch, root)
+    if out is not None:
+        out.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _n_persistent(spark) <= (0 if out is None else 1)
     _sweep(spark)
